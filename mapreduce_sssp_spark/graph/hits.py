@@ -31,8 +31,8 @@ auth->hub pull); each round shuffles only the two node-sized score
 vectors. Both per-round aggregations partial-combine map-side, so a
 celebrity authority with 10^6 in-links costs one combiner tree, not one
 reducer. Two count() actions per round (auth vector, then the joined
-scores) materialize each half-update exactly once; checkpoints every
-``checkpoint_every`` rounds truncate lineage.
+scores) materialize each half-update exactly once; on a cluster a
+reliable checkpoint every 5 rounds truncates lineage.
 """
 
 from __future__ import annotations
@@ -41,20 +41,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .fixpoint import converge, hold, loop_partitions, static_rounds
 
 
-def hits(
-    edges: DataFrame,
-    *,
-    iterations: int = 6,
-    checkpoint_every: int = 5,
-) -> DataFrame:
+def hits(edges: DataFrame, *, iterations: int = 6) -> DataFrame:
     """Hub/authority scores after ``iterations`` synchronous rounds.
 
     edges: DataFrame with (src, dst); parallel edges collapse to one
@@ -63,13 +53,8 @@ def hits(
     float error.
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         e = (
             edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
@@ -99,24 +84,28 @@ def hits(
             "node", F.lit(1.0 / n_nodes).alias("hub")
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
-        # r12: RoundState — per-round lineage truncation (local) / the
-        # old persist+periodic-checkpoint (cluster); see sssp.py. Both
-        # per-round vectors (auths half-update, joined scores) get it:
-        # each is referenced twice downstream, the doubling class.
-        rounds_state = RoundState(spark, checkpoint_every)
-        scores = None
+        # Both per-round vectors (auths half-update, joined scores) are
+        # cut per round: each is referenced twice downstream, the
+        # doubling class. A round's auths drop at the next round, once
+        # the scores built from them are filled.
         prev_auths = None
-        for it in range(1, iterations + 1):
+
+        def half_steps(scores: DataFrame, _n) -> DataFrame:
+            nonlocal prev_auths
+            hubs = scores.select("node", "hub")
             a_raw = (
                 fwd.join(hubs, fwd["src"] == hubs["node"])
                 .groupBy("dst")
                 .agg(F.sum("hub").alias("a_raw"))
             )
-            auths = rounds_state.init(
+            auths = hold(
                 nodes.join(a_raw, nodes["node"] == a_raw["dst"], "left")
                 .select("node", F.coalesce("a_raw", F.lit(0.0)).alias("auth"))
             )
             auths.count()
+            if prev_auths is not None:
+                prev_auths.unpersist()
+            prev_auths = auths
             h_raw = (
                 rev.join(
                     auths.withColumnRenamed("node", "anode"),
@@ -125,20 +114,16 @@ def hits(
                 .groupBy("src")
                 .agg(F.sum("auth").alias("h_raw"))
             )
-            joined = (
+            return (
                 nodes.join(h_raw, nodes["node"] == h_raw["src"], "left")
                 .select("node", F.coalesce("h_raw", F.lit(0.0)).alias("hub"))
                 .join(auths, "node")
                 .select("node", "hub", "auth")
             )
-            joined = rounds_state.advance(joined, it)
-            joined.count()
-            rounds_state.release(hubs)
-            rounds_state.release(prev_auths)
-            rounds_state.release(scores)
-            scores = joined
-            prev_auths = auths
-            hubs = scores.select("node", "hub")
+
+        scores = converge(
+            "hits", hubs, half_steps, every=5, max_rounds=iterations
+        )
 
         # One global normalization, after the loop: two broadcast 1-row
         # totals over the cached final vectors.
@@ -159,8 +144,6 @@ def hits(
     fwd.unpersist()
     rev.unpersist()
     nodes.unpersist()
-    if prev_auths is not None:
-        prev_auths.unpersist()
-    if scores is not None:
-        scores.unpersist()
+    prev_auths.unpersist()
+    scores.unpersist()
     return out

@@ -17,9 +17,9 @@ Formulation notes — two designs were measured, one blows up:
   STATIC (partitioned once, persisted) and iterates only a
   (node, deg, alive) state: doomed nodes send -1 messages along their
   edges, survivors subtract. The state is referenced twice per round
-  (sssp's shape), and reliable checkpoints every ``checkpoint_every``
-  rounds truncate the lineage — the same discipline as
-  sssp.py:114-196, self-sufficient on any session.
+  (sssp's shape), and the loop runs on fixpoint.converge like sssp's —
+  per-round lineage cuts, a reliable checkpoint every 3 rounds on a
+  cluster, self-sufficient on any session.
 
 Round shape: doomed count (the one action — convergence test AND
 materialization), doomed->neighbor decrement messages (join against the
@@ -43,42 +43,39 @@ graphs.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .fixpoint import converge, hold, loop_partitions, static_rounds
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    *,
-    max_rounds: int = 100,
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int, *, max_rounds: int = 100) -> DataFrame:
     """Nodes of the k-core of an undirected graph given as canonical
     (u < v) distinct edges; returns (node, core_deg) where core_deg is
     the node's degree inside the k-core (>= k by definition)."""
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    n_doomed = -1
-    # Clamp opens before the caches are registered: cached plans compile
-    # their exchanges with the conf at persist() time and AQE cannot
-    # coalesce them (full note in sssp.py).
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
+    def doomed(state: DataFrame) -> DataFrame:
+        return state.filter(F.col("alive") & (F.col("deg") < k)).select("node")
+
+    def peel(state: DataFrame, _n) -> DataFrame:
+        gone = F.broadcast(doomed(state).withColumnRenamed("node", "u"))
+        msgs = (
+            und.join(gone, "u")
+            .groupBy("v")
+            .agg(F.count("*").alias("dec"))
+            .select(F.col("v").alias("node"), "dec")
+        )
+        return state.join(msgs, "node", "left").select(
+            "node",
+            (F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"),
+            # alive judged on the OLD degree: this round's doomed die,
+            # survivors carry the decremented degree into next round.
+            (F.col("alive") & (F.col("deg") >= k)).alias("alive"),
+        )
+
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         # Both directions so every edge is visible from each endpoint;
         # partitioned once on u (the message-join key), never
@@ -89,58 +86,22 @@ def kcore(
             .repartition(n_part, "u")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # r12: RoundState — per-round lineage truncation (local) / the
-        # old persist+periodic-checkpoint (cluster); see sssp.py.
-        rounds_state = RoundState(spark, checkpoint_every)
-        state = rounds_state.init(
+        state = hold(
             und.groupBy("u")
             .agg(F.count("*").alias("deg"))
             .select(F.col("u").alias("node"), "deg", F.lit(True).alias("alive"))
         )
-
-        prev_state = None  # parent cache pending unpersist (mis.py's device)
-        for rnd in range(1, max_rounds + 1):
-            doomed = state.filter(F.col("alive") & (F.col("deg") < k)).select(
-                "node"
-            )
-            # The one action per round: materializes state AND tests the
-            # fixed point. Only after it fills this round's cache can
-            # the parent drop — unpersisting earlier forces the fill to
-            # replay lineage back to the last checkpoint (the deferred-
-            # unpersist lesson from mis.py, measured ~2x on its loop).
-            n_doomed = doomed.count()
-            if prev_state is not None:
-                rounds_state.release(prev_state)
-                prev_state = None
-            if n_doomed == 0:
-                break
-            msgs = (
-                und.join(F.broadcast(doomed.withColumnRenamed("node", "u")), "u")
-                .groupBy("v")
-                .agg(F.count("*").alias("dec"))
-                .select(F.col("v").alias("node"), "dec")
-            )
-            new_state = state.join(msgs, "node", "left").select(
-                "node",
-                (F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"),
-                # alive judged on the OLD degree: this round's doomed die,
-                # survivors carry the decremented degree into next round.
-                (F.col("alive") & (F.col("deg") >= k)).alias("alive"),
-            )
-            new_state = rounds_state.advance(new_state, rnd)
-            if rnd % checkpoint_every == 0 and not rounds_state.local:
-                # eager checkpoint already materialized: parent drops now
-                rounds_state.release(state)
-            else:
-                prev_state = state  # drop only after the child's fill
-            state = new_state
-        else:
-            warnings.warn(
-                f"kcore: max_rounds={max_rounds} exhausted with {n_doomed} nodes "
-                "still peeling; returned core may contain sub-k nodes",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        # The doomed count is the one action per round: it materializes
+        # the state AND tests the fixed point, before the peel.
+        state = converge(
+            "kcore",
+            state,
+            peel,
+            doomed,
+            every=3,
+            max_rounds=max_rounds,
+            test_first=True,
+        )
     out = state.filter("alive").select("node", F.col("deg").alias("core_deg"))
     und.unpersist()
     return out

@@ -33,12 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .fixpoint import hold, loop_partitions, static_rounds
 
 
 def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
@@ -50,7 +45,6 @@ def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
     always non-empty. Returns (node BIGINT, community BIGINT).
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
     # Prelude caches register under a core-count clamp, the loop under
@@ -86,7 +80,6 @@ def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
     # broadcast build of the label table (and at 100 TB the label table
     # is |V|-sized — never broadcastable). Measured vs the r12 cadence
     # (bench methodology, min-of-3, sf0.1): 5.9-6.1 s -> 3.9 s.
-    rounds_state = RoundState(spark)
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         # Round-0 labels land at n_part (inside the loop clamp), so the
         # round-1 vote join is already co-partitioned with und.
@@ -112,7 +105,7 @@ def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
         # One cut for the whole chain, materialized under the clamp so
         # the caller's action replays a flat node-sized frame instead of
         # re-running 4 rounds at the session's stock shuffle partitions.
-        labels = rounds_state.init(labels)
+        labels = hold(labels)
         labels.count()
 
     und.unpersist()

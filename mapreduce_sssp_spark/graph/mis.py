@@ -19,13 +19,13 @@ nodes can tie (strict-minimum is then well-defined). Both engines
 evaluate it in exact BIGINT arithmetic; node ids up to ~3.4e9 stay
 within int64 in the product (doc'd bound, far above any SF here).
 
-Round shape (kcore's discipline, sssp.py's loop hardening): the
+Round shape (kcore's discipline, fixpoint.py's loop hardening): the
 undirected edge list is static — partitioned once on the message key,
 persisted, never re-shuffled; per-round work is one join of edges
 against the shrinking undecided set (messages = undecided neighbors'
 priorities), a min-combine, and a left-join state update; one count()
-action per round doubles as the convergence test; reliable checkpoints
-every ``checkpoint_every`` rounds truncate lineage. Winners are
+action per round doubles as the convergence test; on a cluster a
+reliable checkpoint every 3 rounds truncates lineage. Winners are
 broadcast for the removal join (a vertex subset, orders smaller than
 edges); if a first round's winner set outgrew a broadcast at some
 extreme scale, dropping the hint falls back to a shuffle join with the
@@ -52,12 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .fixpoint import RoundState, hold, loop_partitions, static_rounds
 
 #: Knuth multiplicative-hash constants, shared verbatim by the DuckDB
 #: twin (both engines evaluate the identical exact-integer expression).
@@ -141,7 +136,6 @@ def mis_greedy(
     edges: DataFrame,
     *,
     max_rounds: int = 64,
-    checkpoint_every: int = 3,
     tail_nodes: int = MIS_TAIL_NODES,
     tail_edges: int = MIS_TAIL_EDGES,
 ) -> DataFrame:
@@ -163,16 +157,14 @@ def mis_greedy(
     the DuckDB unrolled oracle is unaffected. ``tail_nodes=0`` forces
     the fully distributed path (used by tests to keep the loop
     covered).
+
+    The tail finish ends the loop from inside a round, without
+    materializing the finished state, so this loop is written out on
+    ``RoundState`` instead of ``fixpoint.converge``.
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    n_undec = -1
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         # Both directions so each endpoint sees the edge; partitioned
         # once on u (the message-send key), never re-shuffled.
@@ -182,10 +174,8 @@ def mis_greedy(
             .repartition(n_part, "u")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # r12: RoundState — per-round lineage truncation (local) / the
-        # old persist+periodic-checkpoint (cluster); see sssp.py.
-        rounds_state = RoundState(spark, checkpoint_every)
-        state = rounds_state.init(
+        rounds = RoundState(spark, 3)
+        state = hold(
             und.select(F.col("u").alias("node"))
             .distinct()
             .select(
@@ -196,7 +186,7 @@ def mis_greedy(
             )
         )
 
-        prev_state = None  # parent cache pending unpersist (see below)
+        n_undec = -1  # defined even if max_rounds < 1 skips the loop body
         for rnd in range(1, max_rounds + 1):
             undecided = state.filter(F.col("in_mis").isNull()).select(
                 "node", "pri"
@@ -204,15 +194,9 @@ def mis_greedy(
             # The one action per round: materializes state AND tests
             # the fixed point.
             n_undec = undecided.count()
-            # Only NOW is this round's state cache actually filled —
-            # unpersisting the parent before this point would force the
-            # fill to recompute the whole lineage back to the last
-            # checkpoint (measured: the deferred unpersist cut the
-            # sf0.1 loop ~2x; the eager variant re-ran up to
-            # checkpoint_every rounds of joins inside every count).
-            if prev_state is not None:
-                rounds_state.release(prev_state)
-                prev_state = None
+            # Only NOW is this round's state filled, so the parent can
+            # drop (RoundState.advance has the measured reason).
+            rounds.release()
             if n_undec == 0:
                 break
             if 0 < n_undec <= tail_nodes:
@@ -302,14 +286,7 @@ def mis_greedy(
                     F.when(F.col("new_mis").isNotNull(), F.lit(rnd)),
                 ).alias("decided_round"),
             )
-            new_state = rounds_state.advance(new_state, rnd)
-            if rnd % checkpoint_every == 0 and not rounds_state.local:
-                # checkpoint() is eager: the child is durable before the
-                # parent cache drops, so the immediate release is safe.
-                rounds_state.release(state)
-            else:
-                prev_state = state  # drop only after the child's fill
-            state = new_state
+            state = rounds.advance(new_state, rnd, parent=state)
         else:
             warnings.warn(
                 f"mis_greedy: max_rounds={max_rounds} exhausted with "

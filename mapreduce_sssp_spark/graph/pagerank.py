@@ -31,12 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .fixpoint import converge, hold, loop_partitions, static_rounds
 
 
 def pagerank(
@@ -44,7 +39,6 @@ def pagerank(
     *,
     damping: float = 0.85,
     iterations: int = 10,
-    checkpoint_every: int = 5,
     source: int | None = None,
 ) -> DataFrame:
     """Ranks after ``iterations`` synchronous power-iteration rounds.
@@ -61,16 +55,8 @@ def pagerank(
     whole definition of PPR.
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    # Clamp opens before the caches are registered: cached plans compile
-    # their exchanges with the conf at persist() time and AQE cannot
-    # coalesce them (full note in sssp.py).
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         e = (
             edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
@@ -114,14 +100,13 @@ def pagerank(
             init_rank = ind
             base_col = F.lit(1.0 - damping) * ind
             dangling_share = F.col("dangling") * ind
-        rounds_state = RoundState(spark, checkpoint_every)
-        ranks = rounds_state.init(nodes.select("node", init_rank.alias("rank")))
+        ranks = hold(nodes.select("node", init_rank.alias("rank")))
 
         has_out = deg.select(F.col("src").alias("node")).persist(
             StorageLevel.MEMORY_AND_DISK
         )
 
-        for it in range(1, iterations + 1):
+        def power_step(ranks: DataFrame, _n) -> DataFrame:
             # Dangling mass (rank on nodes with no out-edges) as a 1-row
             # DataFrame broadcast into the update — the round's single
             # count() action then materializes the whole chain, where the
@@ -140,7 +125,7 @@ def pagerank(
                 .groupBy("node")
                 .agg(F.sum("c").alias("contrib"))
             )
-            new_ranks = (
+            return (
                 nodes.join(contribs, "node", "left")
                 .crossJoin(dangling_df)
                 .select(
@@ -152,12 +137,10 @@ def pagerank(
                     ).alias("rank"),
                 )
             )
-            # r12: RoundState — per-round lineage truncation (local) /
-            # the old persist+periodic-checkpoint (cluster); see sssp.py.
-            new_ranks = rounds_state.advance(new_ranks, it)
-            new_ranks.count()
-            rounds_state.release(ranks)
-            ranks = new_ranks
+
+        ranks = converge(
+            "pagerank", ranks, power_step, every=5, max_rounds=iterations
+        )
 
     links.unpersist()
     nodes.unpersist()

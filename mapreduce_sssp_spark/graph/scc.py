@@ -43,27 +43,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .fixpoint import cut, loop_partitions, static_rounds
 
 
 def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
     """(node BIGINT, scc BIGINT): scc = min node id of the node's
     strongly connected component (singletons label themselves)."""
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    # r12: RoundState.truncate — the lineage cuts below were eager
-    # reliable checkpoints (each one computes the frame, then the
-    # checkpoint machinery re-runs it to write files). In local mode a
-    # lazy localCheckpoint is the same cut at one materialization and
-    # no write-twice; cluster mode keeps the reliable checkpoints.
-    rounds_state = RoundState(spark)
+    # Every lineage cut below is fixpoint.cut: an eager localCheckpoint
+    # under a local master (one materialization, no write-twice), a
+    # reliable checkpoint on a cluster.
     with static_rounds(spark, parts=n_part):
         e = (
             edges.select(
@@ -103,7 +94,7 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
                 trimmed = active.join(keep, "node", "left_anti").select(
                     "node", F.col("node").alias("scc")
                 )
-                done_parts.append(rounds_state.truncate(trimmed))
+                done_parts.append(cut(trimmed))
                 # checkpoint, not persist: the peel/confirm chain
                 # otherwise accumulates a join-tree whose replan cost
                 # dominates (measured minutes on a 5-edge graph).
@@ -115,14 +106,14 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
                     .select("src", "dst")
                     .repartition(n_part, "src")
                 )
-                live = rounds_state.truncate(live)
-                active = rounds_state.truncate(keep)
+                live = cut(live)
+                active = cut(keep)
                 keep.unpersist()
             if active.count() == 0:
                 break
 
             # --- B: min-coloring to fixpoint ----------------------------
-            color = rounds_state.truncate(
+            color = cut(
                 active.select("node", F.col("node").alias("color"))
             )
             while True:
@@ -136,7 +127,7 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
                     .groupBy("node")
                     .agg(F.min("color").alias("color"))
                 )
-                new_color = rounds_state.truncate(new_color)
+                new_color = cut(new_color)
                 changed = (
                     new_color.join(
                         color.withColumnRenamed("color", "old"), "node"
@@ -174,7 +165,7 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
                 .repartition(n_part, "from")
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            members = rounds_state.truncate(
+            members = cut(
                 color.filter(F.col("node") == F.col("color"))
                 .select("node", F.col("color").alias("root"))
             )
@@ -189,12 +180,12 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
                     .select(F.col("to").alias("node"), "root")
                     .distinct()
                 )
-                fresh = rounds_state.truncate(
+                fresh = cut(
                     step.join(members, ["node", "root"], "left_anti")
                 )
                 if fresh.count() == 0:
                     break
-                members = rounds_state.truncate(members.unionByName(fresh))
+                members = cut(members.unionByName(fresh))
                 frontier = fresh
 
             scc_labels = (
@@ -203,12 +194,12 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
                 .join(members, "root")
                 .select("node", "scc")
             )
-            done_parts.append(rounds_state.truncate(scc_labels))
+            done_parts.append(cut(scc_labels))
             confirmed = members.select("node").distinct()
-            active = rounds_state.truncate(
+            active = cut(
                 active.join(confirmed, "node", "left_anti")
             )
-            live = rounds_state.truncate(
+            live = cut(
                 live.join(active.select(F.col("node").alias("src")), "src")
                 .join(active.select(F.col("node").alias("dst")), "dst")
                 .select("src", "dst")

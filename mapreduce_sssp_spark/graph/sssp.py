@@ -40,9 +40,10 @@ Scale notes (100 TB / 1000 executors):
   test scale, which replaces the in-job exchange with a per-round
   driver-blocking broadcast-collect job (measured 2x slower end-to-end)
   and would OOM outright on a wide frontier at cluster scale.
-* State is persisted per round and the previous round unpersisted; a
-  reliable checkpoint every ``checkpoint_every`` rounds bounds both
-  lineage depth and DAG-scheduler overhead.
+* The loop runs on ``fixpoint.converge``: state is materialized per
+  round and the previous round released; on a cluster a reliable
+  checkpoint every 5 rounds bounds both lineage depth and DAG-scheduler
+  overhead.
 * Skewed high-out-degree vertices are handled by AQE skew-join; the
   message aggregation is a partial-aggregating ``groupBy`` (map-side
   combine), so hot destination nodes do not funnel through one task.
@@ -61,234 +62,13 @@ Semantics preserved from the reference (SURVEY.md §2.8):
 
 from __future__ import annotations
 
-import os
-import tempfile
-import warnings
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .fixpoint import converge, hold, loop_partitions, static_rounds
+
 SENTINEL = 65535.0  # SingleSourceSP.java:54
-
-
-def loop_partitions(spark: SparkSession, df: DataFrame) -> int:
-    """Data-proportional partition count for a fixpoint loop.
-
-    The input's source-file count bounds useful parallelism: at 100 TB
-    it far exceeds the cluster's cores and the cores win
-    (``defaultParallelism``); at test scale it stops every stage of
-    every round from launching a cluster's worth of near-empty tasks
-    (measured 1.5-3x end-to-end on the graph suite at sf0.01 — per-round
-    task-launch overhead dominates tiny shuffles). Floor of 4 keeps a
-    single-file input from serializing the loop.
-
-    ``inputFiles()`` is pure scan metadata — unlike
-    ``df.rdd.getNumPartitions()``, it never executes query stages (which
-    AQE would do for any derived plan, running the edge-derivation
-    pipeline once just to learn its partition count). Local files are
-    sized directly (~1 MB of COMPRESSED source per loop partition —
-    parquet decompresses ~5-10x and in-loop state is row-expanded, so
-    this is deliberately far finer than the 128 MB scan split size;
-    measured best 8-16 partitions for the 11 MB sf0.1 edges vs 4 from
-    file count); non-local URIs fall back to one partition per file,
-    and any failure falls back to ``defaultParallelism``.
-    """
-    per_part = 1 << 20
-    try:
-        files = df.inputFiles()
-        local = [f.removeprefix("file:") for f in files if f.startswith("file:")]
-        if local and len(local) == len(files):
-            total = sum(os.path.getsize(f) for f in local)
-            data_parts = max(len(files), total // per_part)
-        else:
-            data_parts = max(len(files), 1)
-    except Exception:  # noqa: BLE001 — sizing heuristic, never fatal
-        data_parts = spark.sparkContext.defaultParallelism
-    return int(max(4, min(spark.sparkContext.defaultParallelism, data_parts)))
-
-
-class RoundState:
-    """Per-round state materialization for fixpoint loops, with
-    deployment-adaptive lineage truncation (r12).
-
-    The problem it solves: a BSP loop's round-N DataFrame references the
-    round-(N-1) state TWICE (once as the frontier/message source, once
-    as the join's state side), so the un-truncated logical plan doubles
-    every round. Caching does not truncate logical plans, and cache
-    substitution does not reliably stop the physical recompilation of
-    the nested copies — measured on the r12 probes as per-round action
-    time growing 0.5s -> 4s between reliable checkpoints (stage count
-    doubling per round) while the data stayed constant.
-
-    Local mode: ``localCheckpoint(eager=False)`` — the round's plan
-    becomes a flat LogicalRDD immediately (partitioning AND ordering
-    preserved), the convergence count materializes it as the round's
-    single job, and blocks are MEMORY_AND_DISK like the old persist.
-    Reliable checkpoints are skipped outright: in one local JVM the
-    executors die with the driver, so a reliable checkpoint to a local
-    tempdir adds recovery for exactly nothing — this is a mechanism
-    choice with identical guarantees per deployment, not a bench tune.
-    Old rounds' blocks are dropped by the ContextCleaner as the loop
-    rebinds ``state`` (they are node-table-sized).
-
-    Cluster mode (any non-local master): the pre-r12 behavior,
-    unchanged — persist per round, reliable checkpoint every
-    ``checkpoint_every`` rounds, explicit unpersist of the parent after
-    the child materializes — because there localCheckpoint would trade
-    away executor-loss recovery, which IS worth per-round driver
-    overhead at 100 TB.
-    """
-
-    def __init__(self, spark: SparkSession, checkpoint_every: int = 5):
-        self.local = spark.sparkContext.master.startswith("local")
-        self.every = max(int(checkpoint_every), 1)
-        self._pending: DataFrame | None = None
-
-    def init(self, df: DataFrame) -> DataFrame:
-        """Pre-loop state: same truncation device, never checkpointed
-        (round 1's action materializes it)."""
-        if self.local:
-            return df.localCheckpoint(eager=False)
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def truncate(self, df: DataFrame) -> DataFrame:
-        """Plain lineage cut for intra-loop intermediates that the old
-        code reliable-checkpointed unconditionally: EAGER localCheckpoint
-        in local mode (one materialization into block storage while the
-        parent caches are still warm, no write-twice), reliable
-        checkpoint on a cluster."""
-        if self.local:
-            return df.localCheckpoint(eager=True)
-        return df.checkpoint()
-
-    def advance(self, df: DataFrame, rnd: int) -> DataFrame:
-        """Register round ``rnd``'s state for materialization. Call
-        BEFORE the round's materializing action; pair with release()
-        AFTER it."""
-        if self.local:
-            return df.localCheckpoint(eager=False)
-        cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if rnd % self.every == 0:
-            # checkpoint() materializes from the cache, then the cached
-            # pre-checkpoint copy is dropped so it cannot leak rounds.
-            # Dataset.checkpoint preserves outputPartitioning and
-            # outputOrdering into the LogicalRDD, so a loop's layout
-            # invariants survive truncation.
-            out = cached.checkpoint()
-            cached.unpersist()
-            return out
-        return cached
-
-    def release(self, old: DataFrame | None) -> None:
-        """Drop the PREVIOUS round's state once the new round is
-        materialized. For localCheckpoint-backed states this is a
-        catalog no-op (their blocks are ContextCleaner-managed); for
-        persisted ones (cluster rounds, catalog-cached preludes) it is
-        the old explicit unpersist."""
-        if old is not None:
-            old.unpersist()
-
-
-def memo_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager lineage cut for the cross-query convergence memos
-    (_DAG_STATE_MEMO / _LANDMARK_MEMO / _SCC_MEMO / cooc / BPE): the
-    memoized frame must be materialized (consumers after
-    spark.catalog.clearCache() must not replay the fixpoint) with a
-    flat plan. r12: in local mode that's an eager localCheckpoint —
-    RDD blocks survive clearCache exactly like checkpoint files, minus
-    the reliable checkpoint's materialize-then-rewrite second pass; on
-    a cluster the reliable checkpoint stays (memo blocks should
-    survive executor loss there)."""
-    if df.sparkSession.sparkContext.master.startswith("local"):
-        return df.localCheckpoint(eager=True)
-    return df.checkpoint()
-
-
-@contextmanager
-def static_rounds(
-    spark: SparkSession,
-    parts: int | None = None,
-    no_broadcast: bool = False,
-):
-    """Disable AQE for the duration of a fixpoint loop, restoring the
-    session's prior setting afterwards.
-
-    Inside an iterative loop the per-round plan is IDENTICAL every
-    round, so adaptive execution's per-stage re-planning buys nothing
-    and costs a fixed re-plan latency per stage per round — measured
-    1.5-2.4x end-to-end on the graph suite at sf0.01 (sssp 18.1s ->
-    11.7s, wcc 16.7s -> 7.2s, sssp_dag 11.5s -> 4.8s on local[32]).
-    The one AQE feature that matters mid-loop at scale — skew-join
-    splitting for power-law frontiers — is a property of the graph, not
-    the round; on a known-skewed graph, salt the frontier join key
-    instead (the skew is the same every round, so a static salt does
-    what adaptive splitting would, without the planning tax).
-
-    With AQE off, every per-round shuffle materializes at the raw
-    ``spark.sql.shuffle.partitions`` (no runtime coalescing) — a stock
-    session's 200 means 200 tasks per stage per round regardless of
-    frontier size. The loop therefore also clamps shuffle partitions to
-    the cluster's core count for its duration: parallelism is still
-    full, but per-round task-scheduling overhead stops scaling with a
-    conf that was tuned for one-shot queries.
-
-    ``no_broadcast=True`` additionally disables implicit broadcast
-    joins (autoBroadcastJoinThreshold=-1) for the loop's duration —
-    for loops whose joins are all co-partitioned by construction, a
-    size-estimate-triggered broadcast REPLACES an in-job, exchange-free
-    sort-merge join with a per-round driver-blocking broadcast-collect
-    job (and at cluster scale would try to collect a frontier).
-    Explicit ``F.broadcast(...)`` hints are unaffected by the
-    threshold, so loops that deliberately broadcast keep working.
-
-    The conf flips are session-visible for the loop's duration; queries
-    are executed sequentially by every harness this engine targets.
-    """
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    prev_bcast = spark.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", "10485760"
-    )
-    n = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        clamp = min(int(prev_parts), parts if parts else max(n, 4))
-    except ValueError:
-        # Some deployments set a non-numeric value (e.g. "auto"); skip
-        # the clamp rather than crash before the loop starts.
-        clamp = parts
-    if clamp is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(clamp))
-    if no_broadcast:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if no_broadcast:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", prev_bcast
-            )
-
-
-def _ensure_checkpoint_dir(spark: SparkSession) -> None:
-    """Make reliable checkpoints work on ANY session, not just ours.
-
-    The driver harness calls queries() with its own SparkSession, which has
-    no checkpoint dir configured. On a cluster, point SPARK_GRAFT_CKPT_DIR
-    at shared storage (HDFS/S3) — executors must be able to write it; the
-    tempdir fallback is correct only in local mode, where driver and
-    executors share a filesystem.
-    """
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        ckpt = os.environ.get("SPARK_GRAFT_CKPT_DIR") or tempfile.mkdtemp(
-            prefix="spark-graft-ckpt-"
-        )
-        sc.setCheckpointDir(ckpt)
 
 
 def sssp(
@@ -296,7 +76,6 @@ def sssp(
     source: int,
     *,
     native_nulls: bool = False,
-    checkpoint_every: int = 5,
     max_rounds: int = 500,
     validate_weights: bool = False,
 ) -> DataFrame:
@@ -309,13 +88,11 @@ def sssp(
     source: source node id (SingleSourceSP's ``queryNode``).
     native_nulls: if True, unreachable nodes carry NULL instead of the
         reference's 65535.0 sentinel.
-    checkpoint_every: reliable-checkpoint cadence in rounds.
 
     Returns (source BIGINT, node BIGINT, dist DOUBLE) — one row per node
     with out-edges plus every reachable node (FIXTURES.md B3).
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
     e = edges.select(
@@ -328,13 +105,6 @@ def sssp(
         if neg:
             raise ValueError("sssp requires non-negative edge weights")
 
-    changed = -1  # defined even if max_rounds < 1 skips the loop body
-    # The clamp opens BEFORE the edge/state caches are registered:
-    # cached plans compile their exchanges with the conf in force at
-    # persist() time and are exempt from AQE coalescing, so on a stock
-    # 200-partition session the pre-loop caches would otherwise
-    # materialize through 200-task stages in round 1.
-    rounds_state = RoundState(spark, checkpoint_every)
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         # Min-combine parallel edges, then fix the partitioning on src
         # (sorted within partitions, so per-round sort-merge relax joins
@@ -377,7 +147,7 @@ def sssp(
         hop1 = e.filter(F.col("src") == source).select(
             F.col("dst").alias("node"), F.col("weight").alias("cand")
         )
-        state = rounds_state.init(
+        state = hold(
             nodes.join(hop1, "node", "left").select(
                 "node",
                 "has_out",
@@ -390,7 +160,7 @@ def sssp(
             )
         )
 
-        for rnd in range(1, max_rounds + 1):
+        def relax(state: DataFrame, _n) -> DataFrame:
             # Frontier: only nodes whose distance changed last round emit
             # relaxations (SingleSourceSP.java:179).
             frontier = state.filter(
@@ -410,7 +180,7 @@ def sssp(
             # state side's partitioning + sort order survive the round
             # (see module docstring; broadcasts are off in-loop so the
             # message side is never broadcast-collected per round).
-            new_state = state.join(cand, "node", "left").select(
+            return state.join(cand, "node", "left").select(
                 "node",
                 "has_out",
                 F.least("dist", "cand").alias("dist"),
@@ -420,26 +190,15 @@ def sssp(
                     "updated"
                 ),
             )
-            new_state = rounds_state.advance(new_state, rnd)
 
-            # One count() per round is deliberate: it both decides
-            # convergence AND materializes the round. Letting rounds chain
-            # lazily (checking every K rounds) was measured to save nothing
-            # at K=2 and to blow up driver memory at K=3 — broadcast
-            # planning over the unmaterialized multi-round lineage loses
-            # its size bounds.
-            changed = new_state.filter("updated").count()
-            rounds_state.release(state)
-            state = new_state
-            if changed == 0:
-                break
-        else:
-            warnings.warn(
-                f"sssp: max_rounds={max_rounds} exhausted with {changed} nodes "
-                "still updating; returned distances may not be converged",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        state = converge(
+            "sssp",
+            state,
+            relax,
+            lambda s: s.filter("updated"),
+            every=5,
+            max_rounds=max_rounds,
+        )
     # The per-round count() actions materialized the final state in cache
     # (or checkpoint); the edge cache is no longer needed.
     e.unpersist()

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import loop_partitions, static_rounds
+from .fixpoint import loop_partitions, static_rounds
 
 
 def canonical_edges(pairs: DataFrame) -> DataFrame:

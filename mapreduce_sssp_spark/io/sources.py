@@ -69,17 +69,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     try:
         mtime = os.stat(f"{sf_dir}/{name}.parquet").st_mtime_ns
     except OSError:
-        mtime = None  # non-local path (or missing: read fails as before)
+        # Non-local (or missing) path: no mtime can vouch for a memoized
+        # plan, so read without memoizing.
+        return _read_table(spark, sf_dir, name)
     key = (spark.sparkContext.applicationId, sf_dir, name, mtime)
-    memo = _SCAN_MEMO
-    df = memo.get(key)
+    df = _SCAN_MEMO.get(key)
     if df is None:
-        if name == "events":
-            df = load_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        memo.put(key, df)
+        df = _read_table(spark, sf_dir, name)
+        _SCAN_MEMO.put(key, df)
     return df
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    if name == "events":
+        return load_events(spark, sf_dir)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def load_parallel(

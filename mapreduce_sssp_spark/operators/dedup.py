@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph.fixpoint import static_rounds
 from ..io.sources import load_parallel, load_table
 from .text_common import (
     DUCK_SHINGLES_PRUNED_REL,
@@ -156,8 +157,6 @@ def _cache(df: DataFrame) -> DataFrame:
     not input bytes — shingling/hashing is compute-bound.
     """
     from pyspark.storagelevel import StorageLevel
-
-    from ..graph.sssp import static_rounds
 
     spark = df.sparkSession
     with static_rounds(spark):  # clamp = defaultParallelism

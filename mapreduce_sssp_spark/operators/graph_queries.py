@@ -28,7 +28,8 @@ from ..graph.compat import (
     format_state_line,
 )
 from ..graph.reverse import adjacency_list, reverse_graph, reverse_graph_exploded
-from ..graph.sssp import memo_checkpoint, sssp
+from ..graph.fixpoint import cut, loop_partitions, static_rounds
+from ..graph.sssp import sssp
 from ..runstate import RunCache
 from ..io.sources import (
     EDGES_DAG_SQL,
@@ -74,8 +75,6 @@ def _cache(df: DataFrame) -> DataFrame:
     (asserted in tests/test_cache_clamp.py)."""
     from pyspark.storagelevel import StorageLevel
 
-    from ..graph.sssp import static_rounds
-
     with static_rounds(df.sparkSession):  # clamp = defaultParallelism
         return df.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -113,7 +112,7 @@ def _sssp_dag_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     if df is None:
         edges = edges_order_chain(spark, sf_dir)
         source = _min_source(edges)
-        df = memo_checkpoint(sssp(edges, source))
+        df = cut(sssp(edges, source))
         _DAG_STATE_MEMO.put(key, df)
     return df
 
@@ -257,8 +256,6 @@ def q_sssp_paths_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-proportional work. The oracle rebuilds the identical tree and
     walks it DOWN from the source with a bounded recursive CTE.
     """
-    from ..graph.sssp import RoundState, loop_partitions, static_rounds
-
     st = _sssp_dag_converged(spark, sf_dir)
     edges = edges_order_chain(spark, sf_dir)
     ec = edges.groupBy("src", "dst").agg(F.min("weight").alias("weight"))
@@ -275,9 +272,8 @@ def q_sssp_paths_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy, every probe re-planned the whole tight-edge derivation (and
     # reach sits on BOTH sides of the chain, the dedup-bypass pattern —
     # see q_betweenness_source_dag). One flat leaf, probed 7 times.
-    rounds_state = RoundState(spark)
     with static_rounds(spark, parts=loop_partitions(spark, edges)):
-        parents = rounds_state.truncate(
+        parents = cut(
             ec.join(du, ec["src"] == du["p_src"])
             .join(dv, ec["dst"] == dv["p_dst"])
             .filter(F.col("d_src") + F.col("weight") == F.col("d_dst"))
@@ -440,7 +436,7 @@ def q_betweenness_source_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each round references the previous state once), so each sweep
     chains lazily and materializes as ONE job — two lineage cuts
     total (sigma, out) instead of 14. The shared inputs are flat
-    LogicalRDD leaves (eager localCheckpoint via RoundState.truncate,
+    LogicalRDD leaves (fixpoint.cut: eager localCheckpoint locally,
     reliable checkpoint on a cluster), NOT persist()ed views: the
     round's rebuild join has ``reach``-derived plans on BOTH sides, so
     DeduplicateRelations re-ids one side and the re-id'd subtree no
@@ -453,22 +449,19 @@ def q_betweenness_source_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo): 14.4 s (r12 driver) -> 4.6 s min-of-3 (phase split: tight
     1.6, sigma sweep 1.5, tsig 0.2, delta+out 2.0).
     """
-    from ..graph.sssp import RoundState, loop_partitions, static_rounds
-
     st = _sssp_dag_converged(spark, sf_dir)
     edges = edges_order_chain(spark, sf_dir)
     source = _min_source(edges)
     # The sweep state is node-table-sized — clamp the rounds to the
     # data-proportional partition count like every other fixpoint here.
     n_part = loop_partitions(spark, edges)
-    rounds_state = RoundState(spark)
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         ec = edges.groupBy("src", "dst").agg(F.min("weight").alias("weight"))
         # reach feeds every round's left-outer rebuild plus the tight
         # build and the final join: fix its layout once (node-keyed,
         # sorted) and cut it to a flat leaf (see docstring on why a
         # persist() would be silently bypassed here).
-        reach = rounds_state.truncate(
+        reach = cut(
             st.filter(F.col("dist") < 65535.0)
             .select("node", "dist")
             .repartition(n_part, "node")
@@ -476,7 +469,7 @@ def q_betweenness_source_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         du = reach.select(F.col("node").alias("u"), F.col("dist").alias("d_u"))
         dv = reach.select(F.col("node").alias("v"), F.col("dist").alias("d_v"))
-        tight = rounds_state.truncate(
+        tight = cut(
             ec.join(du, ec["src"] == du["u"])
             .join(dv, ec["dst"] == dv["v"])
             .filter(F.col("d_u") + F.col("weight") == F.col("d_v"))
@@ -510,12 +503,12 @@ def q_betweenness_source_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
         # One cut for the whole sigma sweep: materializes the 7-round
         # chain as a single job and gives the delta sweep (which reads
         # sigma twice) a flat, layout-preserving input.
-        sigma = rounds_state.truncate(sigma)
+        sigma = cut(sigma)
 
         # Delta's per-round recurrence only varies in d_w; the two
         # sigma attachments are static across rounds, so join them ONCE
         # and lay the result out on v — the per-round probe key.
-        tsig = rounds_state.truncate(
+        tsig = cut(
             tight.join(
                 sigma.select(
                     F.col("node").alias("u"), F.col("sigma").alias("sig_u")
@@ -1004,8 +997,6 @@ def q_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.storagelevel import StorageLevel
 
-    from ..graph.sssp import static_rounds
-
     e = (
         edges_from_lineitem(spark, sf_dir).select("src", "dst").distinct()
     )
@@ -1237,7 +1228,7 @@ def _scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..graph.scc import scc
 
         edges = edges_from_lineitem(spark, sf_dir)
-        df = memo_checkpoint(scc(edges.select("src", "dst")))
+        df = cut(scc(edges.select("src", "dst")))
         _SCC_MEMO.put(key, df)
     return df
 
@@ -1427,10 +1418,7 @@ def _part_cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     df = _COOC_EDGES_MEMO.get(key)
     if df is None:
-        from ..graph.sssp import _ensure_checkpoint_dir
-
-        _ensure_checkpoint_dir(spark)
-        df = memo_checkpoint(_part_cooccurrence_edges_plan(spark, sf_dir))
+        df = cut(_part_cooccurrence_edges_plan(spark, sf_dir))
         _COOC_EDGES_MEMO.put(key, df)
     return df
 
@@ -1836,10 +1824,8 @@ def q_walk_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus being recomputed per branch (the same bypass the
     # betweenness restructure hit; also why the r12 persist A/B read
     # "slower").
-    from ..graph.sssp import RoundState
-
     walks = q_random_walks(spark, sf_dir)
-    grouped = RoundState(spark).truncate(
+    grouped = cut(
         walks.groupBy("start").agg(
             F.sort_array(F.collect_list(F.struct("step", "node"))).alias("w")
         )
@@ -2078,9 +2064,10 @@ def q_landmark_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     closeness estimates, and graph embeddings.
 
     The k-source amortization runs through the SINGLE hardened sssp
-    fixpoint (graph/sssp.py) rather than k sequential fixpoints: node
-    ids are sharded into k disjoint ranges (idx * 2^32 + node), the
-    edge set replicates per shard off a broadcast landmark table, and
+    fixpoint (graph/sssp.py, run by graph/fixpoint.py) rather than k
+    sequential fixpoints: node ids are sharded into k disjoint ranges
+    (idx * 2^32 + node), the edge set replicates per shard off a
+    broadcast landmark table, and
     one virtual super-source (-1) connects to each shard's landmark
     with a weight-0 edge. One fixpoint then relaxes all k frontiers
     simultaneously — rounds are shared, the loop's checkpoint cadence,
@@ -2109,9 +2096,7 @@ def _landmark_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     df = _LANDMARK_MEMO.get(key)
     if df is None:
-        df = memo_checkpoint(
-            landmark_distances(edges_from_lineitem(spark, sf_dir))
-        )
+        df = cut(landmark_distances(edges_from_lineitem(spark, sf_dir)))
         _LANDMARK_MEMO.put(key, df)
     return df
 

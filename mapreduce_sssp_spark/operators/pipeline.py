@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph.fixpoint import static_rounds
 from ..io.sources import load_parallel
 from .dedup import JACCARD_THRESHOLD
 from .text_common import (
@@ -97,8 +98,6 @@ def _quality_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on triangles/similarity; see similarity._cache).
     from pyspark.storagelevel import StorageLevel
 
-    from ..graph.sssp import static_rounds
-
     with static_rounds(spark):  # clamp = defaultParallelism
         digests = q_ok.withColumn("digest", F.sha2("text", 256)).persist(
             StorageLevel.MEMORY_AND_DISK
@@ -114,8 +113,6 @@ def _quality_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
-
-    from ..graph.sssp import static_rounds
 
     s1 = _quality_exact_survivors(spark, sf_dir)
     with static_rounds(spark):  # clamp = defaultParallelism

@@ -30,6 +30,7 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..graph.fixpoint import cut, static_rounds
 from ..io.sources import load_parallel, load_table
 
 TOPK = 5
@@ -219,8 +220,6 @@ def _cache(df: DataFrame) -> DataFrame:
     when the input is a single small file — byte-sizing was measured
     5x slower on embedding_neardup at sf0.1."""
     from pyspark.storagelevel import StorageLevel
-
-    from ..graph.sssp import static_rounds
 
     spark = df.sparkSession
     with static_rounds(spark):  # clamp = defaultParallelism
@@ -835,8 +834,6 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; the oracle is the same three rounds unrolled as
     chained CTE stages (the label_propagation / bpe_merges device).
     """
-    from ..graph.sssp import static_rounds
-
     # r12: persist — every Lloyd round re-scanned and re-cast the
     # embeddings otherwise (plus the seed filter).
     vec = _vectors(spark, sf_dir).persist()
@@ -1550,9 +1547,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # The selected set is referenced twice next round (anti-join
             # + penalty join); without truncation the greedy lineage
             # doubles per round (2^K plan blowup — measured 32s -> ~5s
-            # at sf0.01). K-1 tiny eager checkpoints, the fixpoint
-            # cadence device (graph/sssp.py).
-            sel = sel.localCheckpoint(eager=True)
+            # at sf0.01). K-1 tiny eager lineage cuts (graph/fixpoint.py).
+            sel = cut(sel)
     return sel
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph.fixpoint import cut
 from ..runstate import RunCache
 from ..io.sources import load_parallel, load_table
 from .text_common import (
@@ -1522,12 +1523,9 @@ def _bpe_state(
     key = (spark.sparkContext.applicationId, sf_dir, n_merges)
     st = _BPE_STATE_MEMO.get(key)
     if st is None:
-        from ..graph.sssp import _ensure_checkpoint_dir, memo_checkpoint
-
-        _ensure_checkpoint_dir(spark)
         docs = load_parallel(spark, sf_dir, "documents")
         merges, words = _learn_bpe(docs, n_merges)
-        ck = memo_checkpoint(words)  # eager: materialized before unpersist
+        ck = cut(words)  # eager: materialized before unpersist
         words.unpersist()
         st = (merges, ck)
         _BPE_STATE_MEMO.put(key, st)

@@ -32,23 +32,33 @@ class RunCounter:
 
 
 class RunCache:
-    """Bounded per-process memo (converged-DataFrame reuse). A plain
-    dict constant would fold its CONTENTS into the semantic
-    fingerprints once populated — same referee flake as the counters,
-    found on the DAG-state memo. Deliberately NOT a dict subclass
-    (isinstance(dict) would put it back on the folder's whitelist)."""
+    """Bounded, thread-safe per-process memo (converged-DataFrame
+    reuse); a full cache evicts its oldest-inserted entry. A plain dict
+    constant would fold its CONTENTS into the semantic fingerprints
+    once populated — same referee flake as the counters, found on the
+    DAG-state memo. Deliberately NOT a dict subclass (isinstance(dict)
+    would put it back on the folder's whitelist)."""
 
     def __init__(self, cap: int = 8) -> None:
+        self._lock = threading.Lock()
         self._d: dict = {}
         self._cap = cap
 
     def get(self, key):
-        return self._d.get(key)
+        with self._lock:
+            return self._d.get(key)
 
     def put(self, key, value) -> None:
-        if len(self._d) > self._cap:  # bound growth across sessions
-            self._d.clear()
-        self._d[key] = value
+        with self._lock:
+            self._d.pop(key, None)
+            if len(self._d) >= self._cap:
+                del self._d[next(iter(self._d))]
+            self._d[key] = value
 
     def clear(self) -> None:
-        self._d.clear()
+        with self._lock:
+            self._d.clear()
+
+    def __len__(self) -> int:
+        with self._lock:
+            return len(self._d)

@@ -5,9 +5,22 @@ keeping every knob cluster-appropriate (AQE, shuffle partitions, Arrow).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(mem_total: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half of physical RAM (bytes,
+    read from ``os.sysconf`` when not given), at least 1 GB and at most
+    32 GB. A fixed 32 GB heap lets the JVM grow past a small host's RAM
+    until the kernel kills it; half leaves room for the Python driver
+    and the page cache."""
+    if mem_total is None:
+        try:
+            mem_total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):  # no sysconf: old cap
+            mem_total = 64 << 30
+    return f"{min(max(mem_total // 2, 1 << 30), 32 << 30) >> 20}m"
 
 
 def get_spark(
@@ -43,7 +56,8 @@ def get_spark(
         # the bench suite. A no-op on sessions whose JVM already exists
         # (e.g. the external driver harness) — harmless there.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -53,15 +67,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Reliable checkpoints truncate lineage in the SSSP fixpoint loop
-    # (SURVEY.md §4: the one genuinely manual physical concern). On a real
-    # cluster SPARK_GRAFT_CKPT_DIR must point at shared storage (HDFS/S3);
-    # the local tempdir fallback is valid only in local mode. Queries also
-    # self-provision via graph.sssp._ensure_checkpoint_dir, so the engine
-    # works on sessions it did not create.
-    if not spark.sparkContext.getCheckpointDir():
-        spark.sparkContext.setCheckpointDir(
-            os.environ.get("SPARK_GRAFT_CKPT_DIR")
-            or tempfile.mkdtemp(prefix="spark-graft-ckpt-")
-        )
     return spark

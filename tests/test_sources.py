@@ -4,16 +4,20 @@ table registration (io/sources.py)."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from mapreduce_sssp_spark.io import sources
 from mapreduce_sssp_spark.io.sources import (
     load_events,
+    load_table,
     normalize_event_ts,
     register_tables,
 )
+from mapreduce_sssp_spark.runstate import RunCache
 
 SF = "/root/testdata/sf0.001"
 
@@ -91,3 +95,23 @@ def test_register_tables_drops_stale_view_on_failure(spark, tmp_path):
     with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND|region"):
         spark.sql("SELECT count(*) FROM region").collect()
     register_tables(spark, SF)
+
+
+def test_load_table_skips_memo_when_path_cannot_be_stat(spark, tmp_path, monkeypatch):
+    spark.range(3).write.parquet(str(tmp_path / "region.parquet"))
+
+    class NoStat:
+        def __getattr__(self, name):
+            return getattr(os, name)
+
+        @staticmethod
+        def stat(*_a, **_k):
+            raise OSError("not a local path")
+
+    monkeypatch.setattr(sources, "os", NoStat())
+    monkeypatch.setattr(sources, "_SCAN_MEMO", RunCache(cap=64))
+    first = load_table(spark, str(tmp_path), "region")
+    second = load_table(spark, str(tmp_path), "region")
+    assert first is not second
+    assert first.count() == second.count() == 3
+    assert len(sources._SCAN_MEMO) == 0

@@ -1,5 +1,5 @@
-"""The two data/deployment-aware tuning helpers: fixpoint-loop partition
-sizing and the streaming state-store clamp.
+"""The data/deployment-aware tuning helpers: fixpoint-loop partition
+sizing, the streaming state-store clamp and the default driver heap.
 
 Both only ever LOWER parallelism below the session's setting — a session
 tuned for a real cluster keeps its sizing — and both restore the session
@@ -8,8 +8,9 @@ conf on exit.
 
 from __future__ import annotations
 
-from mapreduce_sssp_spark.graph.sssp import loop_partitions, static_rounds
+from mapreduce_sssp_spark.graph.fixpoint import loop_partitions, static_rounds
 from mapreduce_sssp_spark.io.sources import load_table
+from mapreduce_sssp_spark.session import driver_memory
 from mapreduce_sssp_spark.streaming.source import bounded_state_partitions
 
 
@@ -80,3 +81,17 @@ def test_bounded_state_partitions_keeps_lower_session_setting(spark):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+
+def test_driver_memory_is_half_of_ram_within_1g_and_32g():
+    gib = 1 << 30
+    assert driver_memory(16 * gib) == "8192m"
+    assert driver_memory(16455680 * 1024) == "8035m"  # MemTotal in kB
+    assert driver_memory(64 * gib) == "32768m"
+    assert driver_memory(512 * gib) == "32768m"
+    assert driver_memory(1 * gib) == "1024m"
+
+
+def test_driver_memory_reads_the_host():
+    mb = int(driver_memory().removesuffix("m"))
+    assert 1024 <= mb <= 32768
