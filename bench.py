@@ -346,51 +346,31 @@ def _load_records() -> dict[str, float]:
 
 RECORDS = _load_records()
 
-# Queries sharing the checkpointed part co-occurrence graph
-# (graph_queries._part_cooccurrence_edges). The producer cost is paid
-# once per pass and reported as shared_prep_sec instead of being billed
-# to whichever consumer happens to run first (round 5's triangle_counts
-# absorbed its two siblings' one-time checkpoint and read as a 1.6x
-# "regression").
-COOC_CONSUMERS = {
-    "triangle_counts",
-    "kcore",
-    "label_propagation",
-    "clustering_coefficient",
-    "mis_greedy",
-    "random_walks",
-    "ktruss",
-    "community_modularity",
-}
+def prepare(spark, sf_dir: str, name: str) -> float:
+    """Put the shared states (runstate.shared_state) in place for one
+    timed run of query ``name``, before its timer starts: drop the
+    states it owns, so it pays their full fixpoint/induction, and build
+    the states it reads but does not own, so its time is its marginal
+    cost (the memo lookup + its own work). Readers come from the code:
+    a query reads a state when the state is in its source closure
+    (fingerprints.closure). Returns the seconds spent building states
+    that no query owns; the bench reports them as shared_prep_sec."""
+    from mapreduce_sssp_spark.fingerprints import closure
+    from mapreduce_sssp_spark.queries_registry import QUERIES
+    from mapreduce_sssp_spark.runstate import shared_states
 
-# Memo-sharing producer -> consumer pairs: the producer must run before
-# its consumer in every timed pass so the consumer's record measures its
-# MARGINAL cost (the memo lookup + its own work), never the producer's
-# fixpoint/induction. Used both by the per-pass ordering constraint and
-# by the regression re-trial (which must replay the producer untimed
-# before re-timing a consumer, or the consumer pays the full fixpoint
-# and a contention false positive can never clear).
-MEMO_FAMILIES = (
-    ("sssp_dag", "compat_final_lines"),
-    # r12: betweenness consumes the SAME converged-state memo
-    # (_sssp_dag_converged) as compat_final_lines and was missing from
-    # this list — in a reversed pass it ran before sssp_dag, paid the
-    # full fixpoint, and its "marginal" record was unreachable by
-    # construction. Same rationale as every pair here.
-    ("sssp_dag", "betweenness_source_dag"),
-    ("bpe_merges", "bpe_encode"),
-    ("triangle_counts", "kcore"),
-    ("triangle_counts", "label_propagation"),
-    ("kcore", "label_propagation"),
-    # Checkpoint-memo families (the _LANDMARK_MEMO/_SCC_MEMO
-    # device): without the pin, a reversed pass runs a consumer
-    # first, the consumer pays the fixpoint, and the producer's
-    # min-of-passes becomes a dict lookup (r7 measured
-    # landmark_distances "min" 0.12s vs its real 12.6s median).
-    ("landmark_distances", "closeness_landmark"),
-    ("landmark_distances", "harmonic_centrality"),
-    ("scc", "condensation_dag"),
-)
+    reads = closure(QUERIES[name])
+    unowned = 0.0
+    for st in shared_states():
+        if st.owner == name:
+            st.clear()
+        elif st in reads:
+            t0 = time.time()
+            st(spark, sf_dir)
+            if st.owner is None:
+                unowned += time.time() - t0
+            spark.catalog.clearCache()
+    return unowned
 
 
 # --- Crafted power-law skew probe (r9 verdict #6) -----------------------
@@ -589,6 +569,38 @@ def cpu_calibration() -> float:
     return round(best, 4)
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Pay the session's one-time costs before timing anything."""
+    # Warm the JVM: the first job in a fresh JVM pays JIT +
+    # codegen-compiler + shuffle-subsystem init (~8s measured), which
+    # would otherwise be billed entirely to whichever query runs first.
+    # Exercises scan/shuffle/join/agg paths once, then drops.
+    warm = spark.range(0, 1_000_000, 1, 8).selectExpr("id", "id % 97 AS k")
+    warm.join(warm.groupBy("k").count(), "k").write.mode("overwrite").format(
+        "noop"
+    ).save()
+    # Warm the Python-worker + Arrow path the same way: the first
+    # pandas-exchanging stage in a session pays worker spawn + pandas/
+    # pyarrow import per core (~4s measured at 32 cores), which would
+    # otherwise be billed to whichever pandas query runs first.
+    cores = spark.sparkContext.defaultParallelism
+    spark.range(0, cores * 10, 1, cores).mapInPandas(
+        lambda it: it, "id long"
+    ).write.mode("overwrite").format("noop").save()
+    # Also touch each table's parquet footer + first row group once: the
+    # vectorized-reader init and footer parse are session one-time costs
+    # that would otherwise be billed to whichever query scans the table
+    # first (~6s measured on the first fixpoint at sf0.1).
+    from mapreduce_sssp_spark.io.sources import TABLES, load_table
+
+    for t in TABLES:
+        try:
+            load_table(spark, sf_dir, t).limit(10).count()
+        except Exception:
+            pass  # missing table: the query that needs it will report it
+    spark.catalog.clearCache()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -623,34 +635,7 @@ def main() -> None:
         queries = {n: queries[n] for n in list(HEADLINE) + rest}
         query_set = "full"
 
-    # Warm the JVM before timing anything: the first job in a fresh JVM
-    # pays JIT + codegen-compiler + shuffle-subsystem init (~8s measured),
-    # which would otherwise be billed entirely to whichever query runs
-    # first. Exercises scan/shuffle/join/agg paths once, then drops.
-    warm = spark.range(0, 1_000_000, 1, 8).selectExpr("id", "id % 97 AS k")
-    warm.join(warm.groupBy("k").count(), "k").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # Warm the Python-worker + Arrow path the same way: the first
-    # pandas-exchanging stage in a session pays worker spawn + pandas/
-    # pyarrow import per core (~4s measured at 32 cores), which would
-    # otherwise be billed to whichever pandas query runs first.
-    cores = spark.sparkContext.defaultParallelism
-    spark.range(0, cores * 10, 1, cores).mapInPandas(
-        lambda it: it, "id long"
-    ).write.mode("overwrite").format("noop").save()
-    # Also touch each table's parquet footer + first row group once: the
-    # vectorized-reader init and footer parse are session one-time costs
-    # that would otherwise be billed to whichever query scans the table
-    # first (~6s measured on the first fixpoint at sf0.1).
-    from mapreduce_sssp_spark.io.sources import TABLES, load_table
-
-    for t in TABLES:
-        try:
-            load_table(spark, sf_dir, t).limit(10).count()
-        except Exception:
-            pass  # missing table: the query that needs it will report it
-    spark.catalog.clearCache()
+    warm_up(spark, sf_dir)
 
     # Custom-subset invocations write a side artifact: BENCH_RESULTS.json
     # is the committed record of the last FULL (or headline) run, and a
@@ -792,10 +777,9 @@ def main() -> None:
             "host_speed_ratio": host_speed_ratio,
             "queries_norm": norm,
             "value_norm": round(total / host_speed_ratio, 3),
-            # One-time cost of materializing the shared part
-            # co-occurrence checkpoint (consumed by triangle_counts /
-            # kcore / label_propagation); included in value, excluded
-            # from every per-query number.
+            # One-time cost per pass of building the shared states no
+            # query owns (the part co-occurrence edges); included in
+            # value, excluded from every per-query number.
             "shared_prep_sec": shared_prep,
             # Median-of-3 (raw, un-normalized) for the fixpoint queries
             # — their per-round loop latency makes them the noisiest;
@@ -828,18 +812,19 @@ def main() -> None:
     # apart) is no longer noise. Pass 1 flushes a complete artifact
     # before pass 2 starts, so a harness kill mid-pass-2 still leaves
     # every query covered.
-    from mapreduce_sssp_spark.operators.graph_queries import (
-        clear_convergence_memo,
-    )
-    from mapreduce_sssp_spark.operators.text_analysis import clear_bpe_memo
+    from mapreduce_sssp_spark.runstate import clear_shared_state
 
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     shared_prep: float | None = None
 
-    def run_one(name, fn, pass_no):
-        t0 = time.time()
+    def run_one(name, fn, pass_no) -> float:
+        """Time one query; returns the seconds prepare() spent on
+        unowned shared states."""
+        prep = 0.0
         try:
+            prep = prepare(spark, sf_dir, name)
+            t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
             t = round(time.time() - t0, 3)
@@ -862,30 +847,17 @@ def main() -> None:
         # 59s polluted vs 36s isolated). Per-query isolation: drop all
         # cached data.
         spark.catalog.clearCache()
+        return prep
 
+    # Every batch below (main pass, fixpoint pass, retrial) starts with
+    # clear_shared_state(): a later batch must pay the real fixpoint/
+    # induction again, not a memo lookup. Within a batch, prepare() (in
+    # run_one) gives each query its owned states to build and its read
+    # states already built, in any order; the unowned co-occurrence
+    # build is billed to shared_prep_sec (min across main passes), not
+    # to whichever reader runs first.
     for pass_no in range(1, passes + 1):
-        # Re-measure, don't re-lookup: the sssp_dag/compat_final_lines
-        # converged-state memo and the bpe_merges/bpe_encode learned-
-        # tokenizer memo are intra-pass sharing by design, but a later
-        # pass must pay the real fixpoint/induction again.
-        clear_convergence_memo()
-        clear_bpe_memo()
-        # Materialize the shared co-occurrence checkpoint up front and
-        # bill it to shared_prep_sec (min across passes), so its three
-        # consumers each time their marginal cost.
-        if COOC_CONSUMERS & set(queries):
-            from mapreduce_sssp_spark.operators.graph_queries import (
-                _part_cooccurrence_edges,
-            )
-
-            t0 = time.time()
-            try:
-                _part_cooccurrence_edges(spark, sf_dir)  # eager checkpoint
-                prep = round(time.time() - t0, 3)
-                if shared_prep is None or prep < shared_prep:
-                    shared_prep = prep
-            except Exception:
-                traceback.print_exc(file=sys.stderr)
+        clear_shared_state()
         # Alternate direction per pass: a PERIODIC external load burst
         # with period ≈ pass duration hits the same wall-clock offset
         # each pass, i.e. the same query slot — observed as
@@ -896,44 +868,14 @@ def main() -> None:
         ordered = list(queries.items())
         if pass_no % 2 == 0:
             ordered.reverse()
-        # Memo-sharing families: the producer must run before its
-        # consumers in EVERY pass (not just reversed ones), so the same
-        # query pays the fixpoint/induction/pair-generation each pass
-        # and no consumer freeloads a 0.1s dict-lookup "time" into the
-        # min. These families are the ONLY ones needing protection:
-        # their shared state is a reliable checkpoint that survives the
-        # per-query clearCache(); every other shared-prefix family
-        # (pipeline_*, dedup_minhash*) shares plain persist()s, which
-        # clearCache() drops between queries, so neither order lets one
-        # query freeload off the other. Constraints apply sequentially;
-        # for the 3-way co-occurrence family the pair order below
-        # bubble-sorts any permutation into triangle_counts -> kcore ->
-        # label_propagation.
-        for prod, cons in MEMO_FAMILIES:
-            names = [n for n, _ in ordered]
-            if prod in names and cons in names:
-                i, j = names.index(prod), names.index(cons)
-                if i > j:
-                    ordered[i], ordered[j] = ordered[j], ordered[i]
-        for name, fn in ordered:
-            run_one(name, fn, pass_no)
+        prep = sum(run_one(name, fn, pass_no) for name, fn in ordered)
+        if prep and (shared_prep is None or prep < shared_prep):
+            shared_prep = round(prep, 3)
 
-    # Third sample for the fixpoint queries only (median-of-3): memos
-    # cleared so each pays its real fixpoint again; the shared cooc
-    # checkpoint is rebuilt and billed to shared_prep like a main pass.
+    # Third sample for the fixpoint queries only (median-of-3).
     fixpoints = [n for n in FIXPOINT_QUERIES if n in queries]
     if fixpoints and passes >= 2:
-        clear_convergence_memo()
-        clear_bpe_memo()
-        if COOC_CONSUMERS & set(fixpoints):
-            from mapreduce_sssp_spark.operators.graph_queries import (
-                _part_cooccurrence_edges,
-            )
-
-            try:
-                _part_cooccurrence_edges(spark, sf_dir)
-            except Exception:
-                traceback.print_exc(file=sys.stderr)
+        clear_shared_state()
         for name in fixpoints:
             run_one(name, queries[name], passes + 1)
 
@@ -961,44 +903,8 @@ def main() -> None:
             f"{', '.join(regs)}",
             file=sys.stderr,
         )
-        clear_convergence_memo()
-        clear_bpe_memo()
-        if COOC_CONSUMERS & set(regs):
-            from mapreduce_sssp_spark.operators.graph_queries import (
-                _part_cooccurrence_edges,
-            )
-
-            try:
-                _part_cooccurrence_edges(spark, sf_dir)
-            except Exception:
-                traceback.print_exc(file=sys.stderr)
-        # Producers before their consumers within the retrial batch
-        # (same bubble constraint as the main passes).
-        for prod, cons in MEMO_FAMILIES:
-            if prod in regs and cons in regs:
-                i, j = regs.index(prod), regs.index(cons)
-                if i > j:
-                    regs[i], regs[j] = regs[j], regs[i]
+        clear_shared_state()
         for name in regs:
-            # A memo-consumer retried in isolation would pay its
-            # producer's full fixpoint/induction and could never clear
-            # a contention false positive: replay the producer first,
-            # UNTIMED (unless the producer itself is in this retrial
-            # batch, in which case its own run_one below re-primes the
-            # memo), so the retrial measures the same marginal cost the
-            # record pinned.
-            prods = [
-                p for p, c in MEMO_FAMILIES
-                if c == name and p in queries and p not in regs
-            ]
-            for p in dict.fromkeys(prods):
-                try:
-                    queries[p](spark, sf_dir).write.mode(
-                        "overwrite"
-                    ).format("noop").save()
-                    spark.catalog.clearCache()
-                except Exception:
-                    traceback.print_exc(file=sys.stderr)
             run_one(name, queries[name], passes + 1 + retrial)
 
     # Crafted-skew probe: once per full run (skippable via env for

@@ -19,17 +19,20 @@ bump.  queries_registry merges the file's rounds with the hand list
 queries mechanically.
 
 The source closure walks the callable's code objects for referenced
-globals and free variables, recursing into functions/classes defined
-inside this package and folding in the repr of module-level constants
-(sorted for sets — raw set repr is hash-seed dependent and would make
-the fingerprint unstable across processes).  A change to a shared
+globals, free variables and function-local package imports, recursing
+into functions/classes defined inside this package and folding in the
+repr of module-level constants (sorted for sets — raw set repr is
+hash-seed dependent and would make the fingerprint unstable across
+processes).  A change to a shared
 helper (e.g. text_common tokenization) therefore bumps every consumer,
 which is exactly the semantics the staleness queue wants.
 """
 
 from __future__ import annotations
 
+import dis
 import hashlib
+import importlib.util
 import inspect
 import types
 
@@ -85,25 +88,55 @@ def _iter_code_names(code):
     return seen
 
 
+def _ours(module: str) -> bool:
+    return module == _PKG_PREFIX or module.startswith(_PKG_PREFIX + ".")
+
+
 def _in_package(obj) -> bool:
     mod = getattr(obj, "__module__", None)
-    return isinstance(mod, str) and (
-        mod == _PKG_PREFIX or mod.startswith(_PKG_PREFIX + ".")
-    )
+    return isinstance(mod, str) and _ours(mod)
+
+
+def _local_imports(code, package: str):
+    """(name, object) for every ``from <package module> import name``
+    inside code or its nested code objects: the imported name is a
+    local, so the globals lookup never sees it. Relative imports resolve
+    against the function's package; modules outside this package are
+    never imported here."""
+    out = []
+    mod = None
+    ins = list(dis.get_instructions(code))
+    for i, op in enumerate(ins):
+        if op.opname == "IMPORT_NAME":
+            level = ins[i - 2].argval  # LOAD_CONST level, LOAD_CONST fromlist
+            resolved = importlib.util.resolve_name(
+                "." * level + op.argval, package
+            )
+            mod = importlib.import_module(resolved) if _ours(resolved) else None
+        elif op.opname == "IMPORT_FROM" and hasattr(mod, op.argval):
+            out.append((op.argval, getattr(mod, op.argval)))
+    for c in code.co_consts:
+        if isinstance(c, types.CodeType):
+            out += _local_imports(c, package)
+    return out
 
 
 def _closure_sources(fn, visited, parts):
-    """Depth-first source gathering over fn's referenced globals."""
+    """Depth-first source gathering over fn's referenced globals.
+    ``visited`` maps (module, qualname) to the object as reached."""
     if isinstance(fn, property):
         fn = fn.fget
     key = (getattr(fn, "__module__", ""), getattr(fn, "__qualname__", ""))
     if key in visited:
         return
-    visited.add(key)
+    visited[key] = fn
     try:
         parts.append(inspect.getsource(fn))
     except (OSError, TypeError):
         parts.append(f"<nosource:{key}>")
+    # A decorated function (@shared_state) shares its wrapper's key:
+    # walk the body's code, or its callees drop out of the closure.
+    fn = inspect.unwrap(fn)
     code = getattr(fn, "__code__", None)
     if code is None:  # class: walk its methods instead
         if inspect.isclass(fn):
@@ -123,16 +156,18 @@ def _closure_sources(fn, visited, parts):
     closure = getattr(fn, "__closure__", None)
     if closure:
         freebind = dict(zip(code.co_freevars, closure))
+    bound = []
     for name in sorted(names):
         if name in freebind:
             try:
-                val = freebind[name].cell_contents
+                bound.append((name, freebind[name].cell_contents))
             except ValueError:
                 continue
         elif name in globs:
-            val = globs[name]
-        else:
-            continue
+            bound.append((name, globs[name]))
+    package = globs.get("__package__") or fn.__module__.rpartition(".")[0]
+    bound += _local_imports(code, package)
+    for name, val in bound:
         if isinstance(val, types.FunctionType) and _in_package(val):
             _closure_sources(val, visited, parts)
         elif inspect.isclass(val) and _in_package(val):
@@ -143,13 +178,26 @@ def _closure_sources(fn, visited, parts):
             parts.append(f"{name}={_const_repr(val)}")
 
 
+def _walk(fn) -> tuple[dict, list]:
+    visited: dict = {}
+    parts: list = []
+    _closure_sources(fn, visited, parts)
+    return visited, parts
+
+
+def closure(fn) -> set:
+    """Every package function and class in fn's source closure, fn
+    included, as reached: a ``@shared_state`` function appears as its
+    memoizing wrapper, so ``state in closure(query)`` says the query
+    reads that state."""
+    return set(_walk(fn)[0].values())
+
+
 def query_fingerprint(fn, oracle_sql: str | None) -> str:
     """md5 hex fingerprint of a registry query's semantics: its oracle
     SQL (verbatim) + the recursive source closure of the engine
     callable."""
-    visited: set = set()
-    parts: list = [oracle_sql or "<no-oracle>"]
-    _closure_sources(fn, visited, parts)
+    parts = [oracle_sql or "<no-oracle>", *_walk(fn)[1]]
     return hashlib.md5("\n".join(parts).encode("utf-8")).hexdigest()
 
 

@@ -13,7 +13,7 @@ knows how it runs:
   the local and cluster branches, and release a round's parent only
   after its child is filled;
 * ``cut`` is the one eager lineage cut (loop intermediates and the
-  cross-query convergence memos);
+  cross-query shared states);
 * ``converge`` runs the loop: one ``count()`` per round is both the
   convergence test and the round's materialization, and running out of
   ``max_rounds`` emits one ``RuntimeWarning`` naming the loop.
@@ -179,10 +179,11 @@ def hold(df: DataFrame) -> DataFrame:
 
 def cut(df: DataFrame) -> DataFrame:
     """The one eager lineage cut — for intra-loop intermediates and the
-    cross-query convergence memos (_DAG_STATE_MEMO / _LANDMARK_MEMO /
-    _SCC_MEMO / cooc / BPE), whose frames must be materialized (a
-    consumer after spark.catalog.clearCache() must not replay the
-    fixpoint) with a flat plan. Local master: an eager localCheckpoint —
+    cross-query shared states (runstate.shared_state: the converged
+    DAG, SCC and landmark states, the co-occurrence edges, the BPE
+    vocab), whose frames must be materialized (a consumer after
+    spark.catalog.clearCache() must not replay the fixpoint) with a
+    flat plan. Local master: an eager localCheckpoint —
     one materialization into block storage while the parent caches are
     still warm, no write-twice, and RDD blocks survive clearCache like
     checkpoint files. Cluster: a reliable checkpoint, so the frame

@@ -30,7 +30,7 @@ from ..graph.compat import (
 from ..graph.reverse import adjacency_list, reverse_graph, reverse_graph_exploded
 from ..graph.fixpoint import cut, loop_partitions, static_rounds
 from ..graph.sssp import sssp
-from ..runstate import RunCache
+from ..runstate import shared_state
 from ..io.sources import (
     EDGES_DAG_SQL,
     EDGES_SQL,
@@ -84,37 +84,15 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sssp(edges, _min_source(edges))
 
 
-# Converged DAG-SSSP shared by q_sssp_dag and q_compat_final_lines: a
-# caller formatting final lines re-uses the already-computed state
-# instead of re-running the whole fixpoint (which is what a production
-# job would do — format is a projection over the converged state, not a
-# second convergence). Keyed by (applicationId, sf_dir) so a new session
-# or scale never sees a stale frame; the result is reliably checkpointed
-# so it survives a harness's spark.catalog.clearCache() between queries.
-# RunCache, not a dict: a populated dict constant folds its contents
-# into the semantic fingerprints (runstate.py; r12 referee flake).
-_DAG_STATE_MEMO = RunCache()
-
-
-def clear_convergence_memo() -> None:
-    """Drop memoized converged/shared states. For harnesses that time
-    the same query repeatedly (bench passes): without this, pass 2 of
-    sssp_dag measures a dict lookup, not the fixpoint."""
-    _DAG_STATE_MEMO.clear()
-    _COOC_EDGES_MEMO.clear()
-    _LANDMARK_MEMO.clear()
-    _SCC_MEMO.clear()
-
-
+# Converged DAG-SSSP shared by sssp_dag, compat_final_lines,
+# sssp_paths_dag and betweenness_source_dag: a caller formatting final
+# lines re-uses the already-computed state instead of re-running the
+# whole fixpoint (which is what a production job would do — format is a
+# projection over the converged state, not a second convergence).
+@shared_state(owner="sssp_dag")
 def _sssp_dag_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _DAG_STATE_MEMO.get(key)
-    if df is None:
-        edges = edges_order_chain(spark, sf_dir)
-        source = _min_source(edges)
-        df = cut(sssp(edges, source))
-        _DAG_STATE_MEMO.put(key, df)
-    return df
+    edges = edges_order_chain(spark, sf_dir)
+    return cut(sssp(edges, _min_source(edges)))
 
 
 def q_sssp_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1216,21 +1194,13 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Converged SCC labels shared between q_scc and q_condensation_dag —
 # the condensation is a projection over the SAME converged labels, so it
-# must not re-run the nested fixpoint (the _LANDMARK_MEMO device;
-# cleared per bench pass by clear_convergence_memo).
-_SCC_MEMO = RunCache()
-
-
+# must not re-run the nested fixpoint.
+@shared_state(owner="scc")
 def _scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SCC_MEMO.get(key)
-    if df is None:
-        from ..graph.scc import scc
+    from ..graph.scc import scc
 
-        edges = edges_from_lineitem(spark, sf_dir)
-        df = cut(scc(edges.select("src", "dst")))
-        _SCC_MEMO.put(key, df)
-    return df
+    edges = edges_from_lineitem(spark, sf_dir)
+    return cut(scc(edges.select("src", "dst")))
 
 
 def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,7 +1224,7 @@ def q_condensation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges with multiplicities: the cycle-free summary graph scheduling
     and reachability analyses actually run on (it is a DAG by
     construction). Two label joins onto the edge list + one aggregate
-    over the MEMOIZED converged scc labels (the landmark-state device —
+    over the SHARED converged scc labels (runstate.shared_state —
     the condensation is the read path of the SCC index, not a second
     run of the nested fixpoint); the edge table shuffles once per
     endpoint join.
@@ -1403,24 +1373,14 @@ def q_wcc_cyclic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wcc(edges)
 
 
-# Part co-occurrence edges shared by triangle_counts / kcore / lpa: all
-# three analyze the SAME graph, and a production analytics pipeline
-# materializes that graph once, not once per downstream algorithm. Same
-# device as the converged-DAG memo above: keyed by (applicationId,
-# sf_dir), reliably checkpointed so the shared frame survives a
-# harness's clearCache() between queries, cleared per bench pass so
-# timings stay honest (the first of the three queries per pass pays the
-# pair generation; bench.py pins that order across reversed passes).
-_COOC_EDGES_MEMO = RunCache()
-
-
+# Part co-occurrence edges shared by triangle_counts, kcore, lpa and
+# the other co-occurrence analytics: all analyze the SAME graph, and a
+# production analytics pipeline materializes that graph once, not once
+# per downstream algorithm. No query owns it, so the bench bills its
+# build to shared_prep_sec instead of to whichever reader runs first.
+@shared_state()
 def _part_cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _COOC_EDGES_MEMO.get(key)
-    if df is None:
-        df = cut(_part_cooccurrence_edges_plan(spark, sf_dir))
-        _COOC_EDGES_MEMO.put(key, df)
-    return df
+    return cut(_part_cooccurrence_edges_plan(spark, sf_dir))
 
 
 def _part_cooccurrence_edges_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2084,21 +2044,13 @@ def q_landmark_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _landmark_state(spark, sf_dir)
 
 
-# Converged landmark distances shared with q_closeness_landmark — the
-# centrality estimate is a projection over the SAME converged state, so
-# it must not re-run the k-source fixpoint (same device and cadence as
-# _DAG_STATE_MEMO above; cleared per bench pass by
-# clear_convergence_memo so timings stay honest).
-_LANDMARK_MEMO = RunCache()
-
-
+# Converged landmark distances shared with q_closeness_landmark and
+# harmonic_centrality — the centrality estimates are projections over
+# the SAME converged state, so they must not re-run the k-source
+# fixpoint.
+@shared_state(owner="landmark_distances")
 def _landmark_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LANDMARK_MEMO.get(key)
-    if df is None:
-        df = cut(landmark_distances(edges_from_lineitem(spark, sf_dir)))
-        _LANDMARK_MEMO.put(key, df)
-    return df
+    return cut(landmark_distances(edges_from_lineitem(spark, sf_dir)))
 
 
 def q_closeness_landmark(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.fixpoint import cut
-from ..runstate import RunCache
+from ..runstate import shared_state
 from ..io.sources import load_parallel, load_table
 from .text_common import (
     DUCK_SHINGLES_REL,
@@ -1502,34 +1502,16 @@ def _merges_df(
 # production tokenizer workflow induces the merge table ONCE and then
 # encodes with it, so the two queries share one _learn_bpe run instead
 # of each paying the full induction (same rationale as the converged
-# DAG-SSSP state shared by sssp_dag/compat_final_lines).  Keyed by
-# (applicationId, sf_dir, n_merges) so a new session or scale never
-# sees stale state; the post-merge vocab is reliably checkpointed so it
-# survives a harness's spark.catalog.clearCache() between queries.
-# RunCache, not a dict: a populated dict constant folds its contents
-# into the semantic fingerprints (runstate.py; r12 referee flake).
-_BPE_STATE_MEMO = RunCache()
-
-
-def clear_bpe_memo() -> None:
-    """Drop memoized learned-BPE state. Bench passes call this so pass
-    N+1 measures the real induction, not a dict lookup."""
-    _BPE_STATE_MEMO.clear()
-
-
+# DAG-SSSP state shared by sssp_dag/compat_final_lines).
+@shared_state(owner="bpe_merges")
 def _bpe_state(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    st = _BPE_STATE_MEMO.get(key)
-    if st is None:
-        docs = load_parallel(spark, sf_dir, "documents")
-        merges, words = _learn_bpe(docs, n_merges)
-        ck = cut(words)  # eager: materialized before unpersist
-        words.unpersist()
-        st = (merges, ck)
-        _BPE_STATE_MEMO.put(key, st)
-    return st
+    docs = load_parallel(spark, sf_dir, "documents")
+    merges, words = _learn_bpe(docs, n_merges)
+    ck = cut(words)  # eager: materialized before unpersist
+    words.unpersist()
+    return merges, ck
 
 
 BPE_ENCODE_TOPK = 20

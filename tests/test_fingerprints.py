@@ -45,3 +45,15 @@ def test_snapshot_covers_registry():
 
     snap = json.loads(SNAPSHOT.read_text())["queries"]
     assert set(snap) == set(reg.QUERIES)
+
+
+def test_closure_follows_function_local_imports():
+    from mapreduce_sssp_spark import queries_registry as reg
+    from mapreduce_sssp_spark.fingerprints import closure
+    from mapreduce_sssp_spark.graph.kcore import kcore
+    from mapreduce_sssp_spark.graph.scc import scc
+    from mapreduce_sssp_spark.graph.triangles import triangle_counts
+
+    assert triangle_counts in closure(reg.QUERIES["triangle_counts"])
+    assert scc in closure(reg.QUERIES["scc"])
+    assert kcore in closure(reg.QUERIES["kcore"])

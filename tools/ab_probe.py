@@ -2,12 +2,13 @@
 
 Usage: python tools/ab_probe.py <query>[,query2,...] [n_samples]
 
-Times each named query with the bench's own methodology — noop sink,
-memo clear + clearCache between samples, memo producers replayed
-untimed first so marginal-cost queries measure what the bench records —
-and prints min/median of N samples. For A/B runs, run this before and
-after an edit on a quiet host; samples alternate nothing (single
-variant), so edit-compare-edit loops should keep the host load equal.
+Times each named query with the bench's own methodology — bench's
+warm-up, noop sink, shared states cleared + clearCache between samples,
+and bench.prepare before the timer so a query that reads a shared state
+measures its marginal cost, as the bench records it — and prints
+min/median of N samples. For A/B runs, run this before and after an
+edit on a quiet host; samples alternate nothing (single variant), so
+edit-compare-edit loops should keep the host load equal.
 """
 from __future__ import annotations
 
@@ -25,45 +26,20 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entrymod
-    from bench import MEMO_FAMILIES, COOC_CONSUMERS
+    from bench import prepare, warm_up
     from mapreduce_sssp_spark.session import get_spark
-    from mapreduce_sssp_spark.operators.graph_queries import (
-        clear_convergence_memo,
-        _part_cooccurrence_edges,
-    )
-    from mapreduce_sssp_spark.operators.text_analysis import clear_bpe_memo
+    from mapreduce_sssp_spark.runstate import clear_shared_state
 
     spark = get_spark(app_name="spark-graft-ab")
     queries = entrymod.queries()
-
-    # Same warmup as bench.py
-    warm = spark.range(0, 1_000_000, 1, 8).selectExpr("id", "id % 97 AS k")
-    warm.join(warm.groupBy("k").count(), "k").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    from mapreduce_sssp_spark.io.sources import TABLES, load_table
-
-    for t in TABLES:
-        try:
-            load_table(spark, sf_dir, t).limit(10).count()
-        except Exception:
-            pass
-    spark.catalog.clearCache()
+    warm_up(spark, sf_dir)
 
     results: dict[str, list[float]] = {n: [] for n in names}
     for s in range(n_samples):
         for name in names:
-            clear_convergence_memo()
-            clear_bpe_memo()
+            clear_shared_state()
             spark.catalog.clearCache()
-            if name in COOC_CONSUMERS:
-                _part_cooccurrence_edges(spark, sf_dir)
-            prods = [p for p, c in MEMO_FAMILIES if c == name and p in queries]
-            for p in dict.fromkeys(prods):
-                queries[p](spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                spark.catalog.clearCache()
+            prepare(spark, sf_dir, name)
             spark.sparkContext.setJobDescription(f"ab:{name}#{s}")
             t0 = time.time()
             queries[name](spark, sf_dir).write.mode("overwrite").format(

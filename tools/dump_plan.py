@@ -2,9 +2,9 @@
 
 Usage: python tools/dump_plan.py <dir> <suffix> <query>[,query2,...]
 
-Writes plans/<dir>/<query>_<suffix>.txt for each query. Memo producers
-are replayed first (like the bench) so consumer plans reflect their
-benched shape (flat memoized inputs, not the inlined fixpoint).
+Writes plans/<dir>/<query>_<suffix>.txt for each query. bench.prepare
+runs first (like the bench), so a query that reads a shared state shows
+its benched shape (flat memoized inputs, not the inlined fixpoint).
 """
 from __future__ import annotations
 
@@ -20,11 +20,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entrymod
-    from bench import MEMO_FAMILIES, COOC_CONSUMERS
+    from bench import prepare
     from mapreduce_sssp_spark.session import get_spark
-    from mapreduce_sssp_spark.operators.graph_queries import (
-        _part_cooccurrence_edges,
-    )
 
     spark = get_spark(app_name="spark-graft-plan")
     queries = entrymod.queries()
@@ -35,13 +32,7 @@ def main() -> None:
     )
     os.makedirs(root, exist_ok=True)
     for name in names:
-        if name in COOC_CONSUMERS:
-            _part_cooccurrence_edges(spark, sf_dir)
-        prods = [p for p, c in MEMO_FAMILIES if c == name and p in queries]
-        for p in dict.fromkeys(prods):
-            queries[p](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
+        prepare(spark, sf_dir, name)
         df = queries[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
