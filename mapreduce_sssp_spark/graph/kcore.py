@@ -45,7 +45,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .fixpoint import converge, hold, loop_partitions, static_rounds
 
@@ -80,11 +79,10 @@ def kcore(edges: DataFrame, k: int, *, max_rounds: int = 100) -> DataFrame:
         # Both directions so every edge is visible from each endpoint;
         # partitioned once on u (the message-join key), never
         # re-shuffled.
-        und = (
+        und = hold(
             edges.select("u", "v")
             .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .repartition(n_part, "u")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         state = hold(
             und.groupBy("u")

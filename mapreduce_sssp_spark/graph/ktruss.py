@@ -39,7 +39,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .fixpoint import converge, hold, loop_partitions, static_rounds
 
@@ -90,7 +89,7 @@ def ktruss(edges: DataFrame, k: int, *, max_rounds: int = 16) -> DataFrame:
         return support(cur)
 
     with static_rounds(spark, parts=n_part, no_broadcast=True):
-        cur = edges.select("u", "v").persist(StorageLevel.MEMORY_AND_DISK)
+        cur = hold(edges.select("u", "v"))
         # The doomed-edge count is the one action per round: the
         # convergence test and the barrier that fills this round's
         # support table.

@@ -31,9 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .fixpoint import hold, loop_partitions, static_rounds
+from .fixpoint import hold, keep, loop_partitions, static_rounds
 
 
 def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
@@ -47,24 +46,22 @@ def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
     spark = edges.sparkSession
     n_part = loop_partitions(spark, edges)
 
-    # Prelude caches register under a core-count clamp, the loop under
-    # the data-sized n_part — wcc.py has the measured rationale (the
-    # prelude's pair-generation + distinct is the heaviest shuffle and
-    # wants every core; n_part is sized for the small per-round label
-    # shuffles).
-    with static_rounds(spark):
-        pairs = edges.select(
-            F.col("u").cast("long").alias("src"),
-            F.col("v").cast("long").alias("dst"),
-        ).distinct()
-        und = (
-            pairs.unionByName(
-                pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition(n_part, "src")
-            .sortWithinPartitions("src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    # The prelude is kept under a core-count clamp (fixpoint.keep), the
+    # loop runs under the data-sized n_part — wcc.py has the measured
+    # rationale (the prelude's pair-generation + distinct is the
+    # heaviest shuffle and wants every core; n_part is sized for the
+    # small per-round label shuffles).
+    pairs = edges.select(
+        F.col("u").cast("long").alias("src"),
+        F.col("v").cast("long").alias("dst"),
+    ).distinct()
+    und = keep(
+        pairs.unionByName(
+            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
+        .repartition(n_part, "src")
+        .sortWithinPartitions("src")
+    )
 
     # r13 (VERDICT r12 item 3): the r12 cadence — eager localCheckpoint
     # + count per round — paid 4 materializations + 4 driver round

@@ -50,7 +50,6 @@ import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .fixpoint import RoundState, hold, loop_partitions, static_rounds
 
@@ -168,11 +167,10 @@ def mis_greedy(
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         # Both directions so each endpoint sees the edge; partitioned
         # once on u (the message-send key), never re-shuffled.
-        und = (
+        und = hold(
             edges.select("u", "v")
             .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .repartition(n_part, "u")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         rounds = RoundState(spark, 3)
         state = hold(

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .fixpoint import converge, hold, loop_partitions, static_rounds
 
@@ -58,17 +57,15 @@ def pagerank(
     n_part = loop_partitions(spark, edges)
 
     with static_rounds(spark, parts=n_part, no_broadcast=True):
-        e = (
+        e = hold(
             edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
             .distinct()
             .repartition(n_part, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        nodes = (
+        nodes = hold(
             e.select(F.col("src").alias("node"))
             .union(e.select(F.col("dst").alias("node")))
             .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         n_nodes = nodes.count()
         if n_nodes == 0:
@@ -81,11 +78,10 @@ def pagerank(
         deg = e.groupBy("src").agg(F.count("*").alias("deg"))
         # Edge side carries 1/deg so each round multiplies, never
         # re-divides.
-        links = (
+        links = hold(
             e.join(deg, "src")
             .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("inv_deg"))
             .repartition(n_part, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         e.unpersist()
 
@@ -102,9 +98,7 @@ def pagerank(
             dangling_share = F.col("dangling") * ind
         ranks = hold(nodes.select("node", init_rank.alias("rank")))
 
-        has_out = deg.select(F.col("src").alias("node")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        has_out = hold(deg.select(F.col("src").alias("node")))
 
         def power_step(ranks: DataFrame, _n) -> DataFrame:
             # Dangling mass (rank on nodes with no out-edges) as a 1-row

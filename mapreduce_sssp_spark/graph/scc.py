@@ -41,9 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .fixpoint import cut, loop_partitions, static_rounds
+from .fixpoint import cut, hold, loop_partitions, static_rounds
 
 
 def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
@@ -56,7 +55,7 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
     # under a local master (one materialization, no write-twice), a
     # reliable checkpoint on a cluster.
     with static_rounds(spark, parts=n_part):
-        e = (
+        e = hold(
             edges.select(
                 F.col("src").cast("long").alias("src"),
                 F.col("dst").cast("long").alias("dst"),
@@ -64,13 +63,11 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
             .filter(F.col("src") != F.col("dst"))  # self-loops: trivial cycles
             .distinct()
             .repartition(n_part, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        nodes = (
+        nodes = hold(
             edges.select(F.col("src").cast("long").alias("node"))
             .union(edges.select(F.col("dst").cast("long").alias("node")))
             .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
         done_parts: list[DataFrame] = []
@@ -81,10 +78,8 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
             while True:
                 with_out = live.select(F.col("src").alias("node")).distinct()
                 with_in = live.select(F.col("dst").alias("node")).distinct()
-                keep = (
-                    active.join(with_out, "node")
-                    .join(with_in, "node")
-                    .persist(StorageLevel.MEMORY_AND_DISK)
+                keep = hold(
+                    active.join(with_out, "node").join(with_in, "node")
                 )
                 n_keep = keep.count()
                 n_active = active.count()
@@ -140,7 +135,7 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
                     break
 
             # --- C: backward reach inside each root's color class -------
-            rev_in_class = (
+            rev_in_class = hold(
                 live.join(
                     color.select(
                         F.col("node").alias("src"),
@@ -163,7 +158,6 @@ def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
                     F.col("c_src").alias("color"),
                 )
                 .repartition(n_part, "from")
-                .persist(StorageLevel.MEMORY_AND_DISK)
             )
             members = cut(
                 color.filter(F.col("node") == F.col("color"))

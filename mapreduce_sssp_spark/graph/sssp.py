@@ -64,7 +64,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .fixpoint import converge, hold, loop_partitions, static_rounds
 
@@ -113,12 +112,11 @@ def sssp(
         # off in-loop, the frontier x edges relax join is a
         # co-partitioned, co-sorted SMJ: no exchange, no sort, no
         # per-round broadcast-build job on EITHER side.
-        e = (
+        e = hold(
             e.groupBy("src", "dst")
             .agg(F.min("weight").alias("weight"))
             .repartition(n_part, "src")
             .sortWithinPartitions("src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
         # Format job (SingleSourceSP.java:56-129): one state record per

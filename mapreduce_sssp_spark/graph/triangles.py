@@ -44,9 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .fixpoint import loop_partitions, static_rounds
+from .fixpoint import hold, loop_partitions, static_rounds
 
 
 def canonical_edges(pairs: DataFrame) -> DataFrame:
@@ -131,18 +130,16 @@ def _closure_triples(
     edges: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared degree-oriented triangle closure. Returns (edges, deg,
-    tris): the persisted canonical edges, per-node degrees (node, deg),
+    tris): the held canonical edges, per-node degrees (node, deg),
     and one row per triangle (a, b, c) with (a, b) the oriented base
     edge and c the closing corner."""
     spark = edges.sparkSession
-    # Build AND materialize the whole cache chain (edges -> degrees ->
-    # oriented -> adj) under a data-proportional shuffle-partition
-    # clamp.  Two reasons the clamp must wrap CONSTRUCTION, not just the
-    # materializing count(): a cached plan's exchanges are compiled with
-    # the conf in force when persist() registers it, and cached plans
-    # are exempt from AQE partition coalescing
-    # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-    # defaults to false) — so on a stock 200-partition session every
+    # Build the whole held chain (edges -> degrees -> oriented -> adj)
+    # under a data-proportional shuffle-partition clamp.  The clamp
+    # must wrap CONSTRUCTION, not just the materializing action: a held
+    # frame's exchanges are compiled with the conf in force when it is
+    # registered, and they are exempt from AQE partition coalescing —
+    # so on a stock 200-partition session every
     # stage of this chain launches 200 tasks regardless of data size
     # (measured 50s at sf0.01 on a stock local[8] session; ~6s with the
     # clamp).  At cluster scale the clamp resolves to
@@ -151,8 +148,8 @@ def _closure_triples(
     # goes away.
     with static_rounds(spark, loop_partitions(spark, edges)):
         # edges feeds two plan leaves (degree agg + the re-join below);
-        # persist so the upstream pair generation runs once, not twice.
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+        # held so the upstream pair generation runs once, not twice.
+        edges = hold(edges)
         deg = (
             edges.select(F.explode(F.array("u", "v")).alias("node"))
             .groupBy("node")
@@ -168,29 +165,23 @@ def _closure_triples(
         lower_first = (F.col("deg_u") < F.col("deg_v")) | (
             (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
         )
-        # Oriented edge src->dst. Persisted: the subtree (pair-gen
+        # Oriented edge src->dst. Held: the subtree (pair-gen
         # self-join + distinct + degree agg) feeds the adjacency build
         # and the probe join — uncached, Catalyst recomputes it per
-        # leaf. Same short-lived cache pattern as dedup.py/similarity.py;
-        # O(m), tiny relative to the work it saves.
-        oriented = with_deg.select(
+        # leaf. O(m), tiny relative to the work it saves.
+        oriented = hold(with_deg.select(
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias(
                 "src"
             ),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias(
                 "dst"
             ),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ))
         # adj probes both endpoints of every edge (two join leaves
-        # below).
-        adj = (
-            oriented.groupBy("src")
-            .agg(F.collect_list("dst").alias("nbrs"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        # below); the probe join fills the chain.
+        adj = hold(
+            oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
         )
-        # No eager action: the clamp's effect is the partitioning
-        # compiled into the cached plans at persist() time (asserted in
-        # tests/test_cache_clamp.py); the probe join materializes them.
     tris = (
         oriented.join(adj.withColumnRenamed("src", "a_key"),
                       F.col("src") == F.col("a_key"))

@@ -23,9 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .fixpoint import converge, hold, loop_partitions, static_rounds
+from .fixpoint import converge, keep, loop_partitions, static_rounds
 
 
 def wcc(edges: DataFrame, *, max_rounds: int = 200) -> DataFrame:
@@ -38,45 +37,37 @@ def wcc(edges: DataFrame, *, max_rounds: int = 200) -> DataFrame:
     fwd = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     )
-    # The pre-loop caches register under a CORE-COUNT clamp, the loop
-    # under the data-sized n_part. Two scopes on purpose: cached plans
-    # compile their exchanges with the conf at persist() time and AQE
-    # cannot coalesce them (fixpoint.static_rounds has the full note),
-    # so on a stock 200-partition session the prelude would otherwise
-    # run 200-task stages — but the prelude's distinct over the doubled
-    # edge list is the heaviest single shuffle in wcc and wants every
-    # core, while n_part is sized for the loop's small per-round
-    # frontier shuffles (clamping the prelude to n_part measured
-    # 12.9s -> 22.0s at sf0.1).
-    with static_rounds(spark):
-        und = (
-            fwd.unionByName(
-                fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .repartition(n_part, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    # The prelude is kept under a CORE-COUNT clamp (fixpoint.keep), the
+    # loop runs under the data-sized n_part. Two clamps on purpose: the
+    # prelude's distinct over the doubled edge list is the heaviest
+    # single shuffle in wcc and wants every core, while n_part is sized
+    # for the loop's small per-round frontier shuffles (clamping the
+    # prelude to n_part measured 12.9s -> 22.0s at sf0.1).
+    und = keep(
+        fwd.unionByName(
+            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
+        .distinct()
+        .repartition(n_part, "src")
+    )
 
-        # Initialize label = min(node, min neighbor) rather than node:
-        # this is exactly round 1's propagation result, computed in the
-        # prelude for (almost) free — und is already partitioned by src,
-        # so the groupBy(src).min(dst) aggregates exchange-free and the
-        # loop starts one round ahead (~1 round of 4-6 saved; every
-        # label is still a node id inside its own component, so pointer
-        # jumping's label lookup and the min-lattice argument hold).
-        state = hold(
-            und.groupBy("src")
-            .agg(F.min("dst").alias("min_nbr"))
-            .select(
-                F.col("src").alias("node"),
-                F.least("src", "min_nbr").alias("component"),
-            )
-            .withColumn("updated", F.lit(True))
+    # Initialize label = min(node, min neighbor) rather than node: this
+    # is exactly round 1's propagation result, computed in the prelude
+    # for (almost) free — und is already partitioned by src, so the
+    # groupBy(src).min(dst) aggregates exchange-free and the loop starts
+    # one round ahead (~1 round of 4-6 saved; every label is still a
+    # node id inside its own component, so pointer jumping's label
+    # lookup and the min-lattice argument hold). Round 1's count fills
+    # both frames in one job.
+    state = keep(
+        und.groupBy("src")
+        .agg(F.min("dst").alias("min_nbr"))
+        .select(
+            F.col("src").alias("node"),
+            F.least("src", "min_nbr").alias("component"),
         )
-        # No eager action: the clamp's effect is the partitioning
-        # compiled into the cached plan at persist() time; round 1's
-        # count materializes both caches in one job.
+        .withColumn("updated", F.lit(True))
+    )
 
     def propagate(state: DataFrame, _n) -> DataFrame:
         frontier = state.filter("updated").select(

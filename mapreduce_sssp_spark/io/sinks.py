@@ -24,6 +24,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph.fixpoint import keep
 from .sources import load_table
 from ..contracts import finite
 
@@ -224,9 +225,9 @@ def q_csv_malformed_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    # A corrupt-record count requires caching the parse (Spark refuses
-    # to filter on the corrupt column of an uncached lazy CSV relation).
-    back = back.cache()
+    # A corrupt-record count requires materializing the parse (Spark
+    # refuses to filter on the corrupt column of a lazy CSV relation).
+    back = keep(back)
     return back.agg(
         F.sum(F.when(F.col("_corrupt_record").isNull(), 1).otherwise(0)).alias(
             "n_good"

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph.fixpoint import static_rounds
+from ..graph.fixpoint import keep
 from ..io.sources import load_parallel, load_table
 from .text_common import (
     DUCK_SHINGLES_PRUNED_REL,
@@ -128,8 +128,8 @@ def _pruned_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both the raw postings (consumed twice by the prune: df agg + anti-
     join probe) and the pruned output (consumed by sizes agg + both
-    self-join sides) are multi-branch subtrees — cached per the _cache
-    contract. Dropping the pruned cache and re-deriving the (broadcast)
+    self-join sides) are multi-branch subtrees — kept (fixpoint.keep).
+    Dropping the pruned frame and re-deriving the (broadcast)
     anti join per consumer was A/B-measured at sf0.1 and lost (2.7-3.0s
     cached vs 3.3-3.6s warm): the hot-set aggregate replays per branch
     and costs more than the cache write. The residual prune tax at
@@ -137,33 +137,8 @@ def _pruned_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti join on a 260k-row relation), not data cost — at corpus scale
     both passes are linear and the anti join never shuffles postings.
     """
-    post = _cache(_shingle_postings(spark, sf_dir))
-    return _cache(prune_hot_shingles(post))
-
-
-def _cache(df: DataFrame) -> DataFrame:
-    """Short-lived cache for a subtree referenced by several plan
-    branches. Spark's exchange-reuse does NOT reliably kick in for these
-    self-join shapes under AQE (measured 4-5x recompute overhead), so the
-    shared subtree is persisted explicitly. Footprint is a few MB of
-    signatures/postings per query; entries are dropped with the session.
-
-    Registered and materialized under a core-count shuffle-partition
-    clamp: cached plans compile their exchanges with the conf in force
-    at persist() time and are exempt from AQE coalescing, so on a stock
-    200-partition session the minhash-signature aggregation would run
-    200-task stages regardless of data size (same pathology measured on
-    triangles/similarity; see similarity._cache). defaultParallelism,
-    not input bytes — shingling/hashing is compute-bound.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    spark = df.sparkSession
-    with static_rounds(spark):  # clamp = defaultParallelism
-        # No eager action needed: the clamp's effect is the partitioning
-        # compiled into the cached plan at persist() time (asserted in
-        # tests/test_cache_clamp.py); the first consumer materializes.
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
+    post = keep(_shingle_postings(spark, sf_dir))
+    return keep(prune_hot_shingles(post))
 
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,7 +242,7 @@ def minhash_signatures_from_postings(
     """Signature aggregation over PRE-BUILT (doc_id, s) postings — the
     shared-subtree entry point (r11 claw-back, r10 verdict #3): callers
     that already hold a cached shingle relation (minhash_verified_pairs
-    caches with_shingles for its exact-verify side) explode THAT instead
+    keeps with_shingles for its exact-verify side) explode THAT instead
     of letting the signature path re-run the whole tokenize+shingle
     pipeline a second time over the corpus (the r10 portable-signature
     change was billed for a regression that was really this duplicated
@@ -363,10 +338,10 @@ def lsh_candidate_pairs(
         .filter(F.col("bucket_n") > max_bucket)
         .select("band_id", "band_hash")
     )
-    # Cached because both self-join legs read it; `banded` itself is a
-    # cheap posexplode over the caller-cached signatures, so its two
+    # Kept because both self-join legs read it; `banded` itself is a
+    # cheap posexplode over the caller-kept signatures, so its two
     # consumers (the sizes agg and the anti-join probe) recompute it.
-    kept = _cache(
+    kept = keep(
         banded.join(oversized, ["band_id", "band_hash"], "left_anti")
     )
     a = kept.alias("a")
@@ -389,18 +364,18 @@ def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns the pairs) and ``dedup_minhash_clusters`` (which closes them
     into components)."""
     docs = load_parallel(spark, sf_dir, "documents")
-    sh = _cache(with_shingles(docs))
-    # The signature path explodes the SAME cached shingle relation the
+    sh = keep(with_shingles(docs))
+    # The signature path explodes the SAME kept shingle relation the
     # exact-verify side reads (minhash_signatures_from_postings) — one
     # tokenize+shingle pass per query, not two (r11 claw-back).
     post = sh.select("doc_id", F.explode_outer("sh").alias("s")).filter(
         F.col("s").isNotNull()
     )
     # sigs feeds the banded explode TWICE (the oversized-bucket agg and
-    # the anti-join probe), so the persist keeps the 64-agg signature
+    # the anti-join probe), so keeping it stops the 64-agg signature
     # pass from running twice; the clamped partitioning it pins
-    # downstream rides along (see _cache).
-    cand = lsh_candidate_pairs(_cache(minhash_signatures_from_postings(post)))
+    # downstream rides along (see fixpoint.keep).
+    cand = lsh_candidate_pairs(keep(minhash_signatures_from_postings(post)))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return (
@@ -597,7 +572,7 @@ def q_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     number of distinct shingles shared with the benchmark (the triage
     ranking a curator reviews before dropping documents).
     """
-    post = _cache(_shingle_postings(spark, sf_dir))
+    post = keep(_shingle_postings(spark, sf_dir))
     bench = (
         post.filter(F.col("doc_id") % BENCH_MOD == 0).select("s").distinct()
     )
@@ -654,7 +629,7 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("span").alias("digest"),
         )
     )
-    spans = _cache(spans)
+    spans = keep(spans)
     first = spans.groupBy("digest").agg(
         F.min(F.struct("doc_id", "span_idx")).alias("first")
     )
@@ -709,7 +684,7 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 bands of 6 bits is the standard rebalance if a corpus
     concentrates.
     """
-    sig = _cache(q_dedup_simhash(spark, sf_dir))
+    sig = keep(q_dedup_simhash(spark, sf_dir))
     bands = sig.select(
         "doc_id",
         "simhash",
@@ -800,8 +775,8 @@ def q_cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap.
     """
     # (source, shingle) feeds THREE branches (vocab agg + both self-join
-    # legs) — cache it or the doc-source join + distinct replays per leg.
-    d = _cache(
+    # legs) — keep it or the doc-source join + distinct replays per leg.
+    d = keep(
         _pruned_postings(spark, sf_dir)
         .join(
             load_table(spark, sf_dir, "documents").select(
@@ -904,8 +879,8 @@ def q_minhash_jaccard_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     # pairs feeds THREE branches (both docs_in union legs + the final
-    # signature join) and is the expensive self-join + aggregate; cache.
-    pairs = _cache(
+    # signature join) and is the expensive self-join + aggregate; keep.
+    pairs = keep(
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
@@ -935,7 +910,7 @@ def q_minhash_jaccard_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(MINHASH_ERR_K)
     ]
     # sig (k x md5 min-aggs) feeds both sides of the signature join.
-    sig = _cache(post_f.groupBy("doc_id").agg(*aggs))
+    sig = keep(post_f.groupBy("doc_id").agg(*aggs))
     sig_a = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"h{i}").alias(f"a_h{i}") for i in range(MINHASH_ERR_K)],

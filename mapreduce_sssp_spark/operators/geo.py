@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph.fixpoint import keep
 from ..io.sources import load_table
 
 GEO_RADIUS_M = 50_000
@@ -237,18 +238,17 @@ def q_geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expensive haversine stage) fed every downstream branch by lineage
     # — sym is referenced by the degree pass, the core-core edges AND
     # the border attach, and each sym reference replays pairs twice.
-    # One persist each for the radius pairs and the core set.
-    sym = (
+    # One keep each for the radius pairs and the core set.
+    sym = keep(
         pairs.union(
             pairs.select(
                 F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")
             )
         )
         .select(F.col("a_id").alias("pid"), F.col("b_id").alias("nbr"))
-        .persist()
     )
     deg = sym.groupBy("pid").agg(F.count("*").alias("n_nbr"))
-    core = deg.filter(F.col("n_nbr") >= DBSCAN_MINPTS).select("pid").persist()
+    core = keep(deg.filter(F.col("n_nbr") >= DBSCAN_MINPTS).select("pid"))
     # r13: wcc symmetrizes + distincts its input internally, and sym
     # already carries BOTH directions — feeding it the canonical half
     # (pid < nbr) halves the union+distinct volume of wcc's prelude
@@ -267,7 +267,7 @@ def q_geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("pid").alias("node"), F.col("pid").alias("component"))
     # comp feeds both the border attach and the core counts (two
     # consumers of the union over the converged labels).
-    comp = comp.unionByName(singletons).persist()
+    comp = keep(comp.unionByName(singletons))
     border = (
         sym.join(core.select(F.col("pid").alias("nbr")), "nbr")
         .join(core, "pid", "left_anti")

@@ -28,7 +28,7 @@ from ..graph.compat import (
     format_state_line,
 )
 from ..graph.reverse import adjacency_list, reverse_graph, reverse_graph_exploded
-from ..graph.fixpoint import cut, loop_partitions, static_rounds
+from ..graph.fixpoint import cut, hold, keep, loop_partitions, static_rounds
 from ..graph.sssp import sssp
 from ..runstate import shared_state
 from ..io.sources import (
@@ -52,31 +52,6 @@ def _min_source(edges: DataFrame, default: int = 0) -> int:
     result, so the default never changes a non-degenerate answer."""
     v = edges.agg(F.min("src")).collect()[0][0]
     return default if v is None else int(v)
-
-
-def _cache(df: DataFrame) -> DataFrame:
-    """Short-lived cache for an edge/incidence subtree that feeds a
-    SELF-JOIN (the dedup._cache / similarity._cache device): exchange
-    reuse is unreliable for self-join shapes under AQE, so without it
-    the scan + distinct chain runs once per join leg — measured 0.75x
-    (two_hop_paths) to 0.44x (minhash pair audit) whole-query time at
-    sf0.1. Cache ONLY those shapes: for subtrees whose branches are
-    distinct aggregates/joins (wl_relabel's nbr, negative_sampling's
-    edge set, the capped bipartite incidence) AQE exchange reuse already
-    shares the work and an explicit persist measured ~2x SLOWER
-    (min-of-3 interleaved A/B at sf0.1) — materialization cost plus the
-    loss of AQE replanning inside the cached subtree dominate. A few MB
-    per query; entries die with the session.
-
-    Registered under the core-count shuffle-partition clamp: cached plans
-    compile their exchanges at persist() time and are exempt from AQE
-    coalescing, so on a stock 200-partition session every cached-subtree
-    stage would otherwise launch 200 tasks regardless of data size
-    (asserted in tests/test_cache_clamp.py)."""
-    from pyspark.storagelevel import StorageLevel
-
-    with static_rounds(df.sparkSession):  # clamp = defaultParallelism
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,12 +264,11 @@ def q_sssp_paths_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform("path", lambda x: x.cast("string")), "->"
         ).alias("path"),
     )
-    # Materialize the 7-join reconstruction chain under the loop clamp:
-    # on a stock 200-partition session the caller's action would run
-    # every tiny join as a 200-task stage (the betweenness lesson).
-    with static_rounds(spark):
-        out = out.persist()
-        out.count()
+    # Materialize the 7-join reconstruction chain under the clamp: on a
+    # stock 200-partition session the caller's action would run every
+    # tiny join as a 200-task stage (the betweenness lesson).
+    out = keep(out)
+    out.count()
     return out
 
 
@@ -330,7 +304,7 @@ def q_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # READS — the two incidence endpoints, which must be non-null
     # (NULL-node-id sweep; the r11 l_quantity rail was dropped because
     # the weight is never read). Twin mirrors the WHERE.
-    inc = _cache(
+    inc = keep(
         load_table(spark, sf_dir, "lineitem")
         .filter(
             F.col("l_suppkey").isNotNull() & F.col("l_partkey").isNotNull()
@@ -546,11 +520,11 @@ def q_betweenness_source_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
         # executes at the CALLER's action with the session's stock 200
         # shuffle partitions (200-task stages per tiny round on a
         # vanilla driver session).
-        out = out.persist()
+        out = hold(out)
         out.count()
-    # reach/tight/tsig are localCheckpoint leaves — their blocks are
-    # dropped by the ContextCleaner when the frames go out of scope, so
-    # there is nothing to unpersist.
+    # reach/tight/tsig are leaves — their blocks are dropped by the
+    # ContextCleaner when the frames go out of scope, so there is
+    # nothing to unpersist.
     return out
 
 
@@ -716,7 +690,7 @@ def q_two_hop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard FoF truncation) and AQE skew-split handles the rest; the
     uncapped version here is the exact semantics the oracle can check.
     """
-    e = _cache(
+    e = keep(
         edges_from_lineitem(spark, sf_dir).select("src", "dst").distinct()
     )
     a, b = e.alias("a"), e.alias("b")
@@ -807,7 +781,7 @@ def q_two_hop_paths_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumed broadcastable) keyed on the same column as the path
     self-join, so it rides the identical shuffle partitioning.
     """
-    e = _cache(
+    e = keep(
         edges_from_lineitem(spark, sf_dir).select("src", "dst").distinct()
     )
     outd = e.groupBy(F.col("src").alias("mid")).agg(
@@ -820,7 +794,7 @@ def q_two_hop_paths_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mid", (F.col("indeg") * F.col("outdeg")).alias("load")
     )
     cap = _permille_cap(loads, "load")
-    keep = (
+    relays = (
         loads.join(F.broadcast(cap), F.col("load") <= F.col("cap"))
         .select("mid")
     )
@@ -829,7 +803,7 @@ def q_two_hop_paths_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hub relays never reach the pair-exploding join (pinned in
     # tests/test_plans.py).
     a_kept = a.join(
-        keep.select(F.col("mid").alias("dst")), "dst", "left_semi"
+        relays.select(F.col("mid").alias("dst")), "dst", "left_semi"
     )
     paths = a_kept.join(b, F.col("a.dst") == F.col("b.src")).select(
         F.col("a.src").alias("src"),
@@ -973,24 +947,20 @@ def q_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k is TakeOrdered on (aa_e9 DESC, u, v) — total order, no
     global sort.
     """
-    from pyspark.storagelevel import StorageLevel
-
     e = (
         edges_from_lineitem(spark, sf_dir).select("src", "dst").distinct()
     )
     # und feeds FOUR plan branches (adj twice via the union, the degree
-    # chain, and the direct-edge anti join) — persist under the clamp or
-    # the scan+distinct chain runs once per branch (dedup._cache lesson).
-    with static_rounds(spark):
-        und = (
-            e.filter(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("x"),
-                F.greatest("src", "dst").alias("y"),
-            )
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    # chain, and the direct-edge anti join) — kept, or the scan+distinct
+    # chain runs once per branch.
+    und = keep(
+        e.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("x"),
+            F.greatest("src", "dst").alias("y"),
         )
+        .distinct()
+    )
     adj = und.select(F.col("x").alias("r"), F.col("y").alias("n")).union(
         und.select(F.col("y").alias("r"), F.col("x").alias("n"))
     )
@@ -1008,23 +978,20 @@ def q_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("r", "d")
     )
     # relay-keyed neighbor lists restricted to kept relays, with the
-    # relay's degree riding along for the AA contribution. Persisted
-    # under the partition clamp: the seed/candidate legs reference this
-    # subtree twice and exchange-reuse is unreliable for self-join
-    # shapes under AQE (the dedup._cache lesson).
-    with static_rounds(spark):
-        rel = (
-            adj.join(kept_relays, "r")
-            .select(
-                "r",
-                "n",
-                F.round(F.lit(1e9) / F.log(F.col("d").cast("double")))
-                .cast("long")
-                .alias("aa_contrib_e9"),
-            )
-            .repartition("r")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    # relay's degree riding along for the AA contribution. Kept: the
+    # seed/candidate legs reference this subtree twice and
+    # exchange-reuse is unreliable for self-join shapes under AQE.
+    rel = keep(
+        adj.join(kept_relays, "r")
+        .select(
+            "r",
+            "n",
+            F.round(F.lit(1e9) / F.log(F.col("d").cast("double")))
+            .cast("long")
+            .alias("aa_contrib_e9"),
         )
+        .repartition("r")
+    )
     seeds = rel.filter(F.col("n") % LINKPRED_SEED_MOD == 0).select(
         "r", F.col("n").alias("u")
     )
@@ -1151,7 +1118,7 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 (guide §1.2): e feeds four references (both node branches,
     # the md5 candidate derivation, the rejection anti-join) — cache the
     # distinct edge set once instead of replaying scan+distinct per use.
-    e = _cache(edges_from_lineitem(spark, sf_dir).select("src", "dst").distinct())
+    e = keep(edges_from_lineitem(spark, sf_dir).select("src", "dst").distinct())
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -1482,10 +1449,9 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = li.select(
         F.col("p").alias("src"), F.lead("p").over(w).alias("dst")
     )
-    edges = (
+    edges = keep(
         seq.filter(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
         .distinct()
-        .persist()
     )
     rev = edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -2220,8 +2186,8 @@ def q_wl_relabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nbr feeds the degree aggregate and every WL round's neighbor join,
     # but all consumers are distinct-branch joins/aggregates — AQE
     # exchange reuse shares them, and an explicit persist measured 2.4x
-    # SLOWER (min-of-3 at sf0.1). Cache only true self-join subtrees
-    # (see _cache).
+    # SLOWER (min-of-3 at sf0.1). Keep only true self-join subtrees
+    # (see fixpoint.keep).
     nbr = e.select(
         F.col("src").alias("node"), F.col("dst").alias("nbr")
     ).unionAll(

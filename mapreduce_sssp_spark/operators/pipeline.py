@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph.fixpoint import static_rounds
+from ..graph.fixpoint import keep
 from ..io.sources import load_parallel
 from .dedup import JACCARD_THRESHOLD
 from .text_common import (
@@ -86,52 +86,27 @@ def _quality_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Exact dedup: min doc_id per sha2 digest (digests shuffle, texts
-    # stay put). Cached: feeds the keep-set agg, the survivor join and
-    # the shingle pipeline below.
-    #
-    # The whole cache chain (digests -> s1 -> post) is registered and
-    # materialized under a core-count shuffle-partition clamp: cached
-    # plans compile their exchanges with the conf in force at persist()
-    # time and are exempt from AQE coalescing, so on a stock
-    # 200-partition session the semi-join exchange inside s1 would run
-    # 200-task stages regardless of data size (same pathology measured
-    # on triangles/similarity; see similarity._cache).
-    from pyspark.storagelevel import StorageLevel
-
-    with static_rounds(spark):  # clamp = defaultParallelism
-        digests = q_ok.withColumn("digest", F.sha2("text", 256)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        keep_exact = digests.groupBy("digest").agg(
-            F.min("doc_id").alias("doc_id")
-        )
-        s1 = digests.join(keep_exact, ["digest", "doc_id"], "semi").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    return s1
+    # stay put). Kept: feeds the keep-set agg, the survivor join and
+    # the shingle pipeline below. The whole chain (digests -> s1 ->
+    # post) is kept under the core-count clamp (fixpoint.keep), so on a
+    # stock 200-partition session the semi-join exchange inside s1 does
+    # not run 200-task stages.
+    digests = keep(q_ok.withColumn("digest", F.sha2("text", 256)))
+    keep_exact = digests.groupBy("digest").agg(F.min("doc_id").alias("doc_id"))
+    return keep(digests.join(keep_exact, ["digest", "doc_id"], "semi"))
 
 
 def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     s1 = _quality_exact_survivors(spark, sf_dir)
-    with static_rounds(spark):  # clamp = defaultParallelism
-        # Near-dedup among exact survivors: inverted-index Jaccard, drop
-        # the higher id of each >= threshold pair. Postings are max-df
-        # pruned BEFORE the pair join (text_common.SHINGLE_MAX_DF — the
-        # same posting-skew guard as dedup._pruned_postings; a no-op at
-        # test scale, the d^2 bound on boilerplate shingles at corpus
-        # scale). Raw postings feed the prune twice (df agg + keep
-        # join); the pruned set feeds sizes + both self-join sides —
-        # both cached.
-        post_raw = shingle_postings(s1.select("doc_id", "text")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        post = prune_hot_shingles(post_raw).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        # No eager action: the clamp's effect is the partitioning
-        # compiled into the cached plans at persist() time.
+    # Near-dedup among exact survivors: inverted-index Jaccard, drop the
+    # higher id of each >= threshold pair. Postings are max-df pruned
+    # BEFORE the pair join (text_common.SHINGLE_MAX_DF — the same
+    # posting-skew guard as dedup._pruned_postings; a no-op at test
+    # scale, the d^2 bound on boilerplate shingles at corpus scale). Raw
+    # postings feed the prune twice (df agg + keep join); the pruned set
+    # feeds sizes + both self-join sides — both kept.
+    post_raw = keep(shingle_postings(s1.select("doc_id", "text")))
+    post = keep(prune_hot_shingles(post_raw))
     sizes = post.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = post.alias("a"), post.alias("b")
     inter = (

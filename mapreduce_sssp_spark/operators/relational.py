@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..contracts import finite
+from ..graph.fixpoint import keep
 from ..io.sources import load_parallel, load_table, register_tables
 
 DEC = "decimal(18,2)"
@@ -883,15 +884,15 @@ def q_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Finite-measure contract (r12 non-finite probe: the two engines'
     # medians disagree once a NaN enters the sort). Twin mirrors.
-    # r12: load_parallel + persist — the three sequential median passes
-    # each re-scanned the 2-column projection on one task; the cached
+    # r12: load_parallel + keep — the three sequential median passes
+    # each re-scanned the 2-column projection on one task; the kept
     # projection is ~16 bytes/row (the same posture as the graph edge
-    # caches, which persist the identical lineitem slice).
-    li = load_parallel(spark, sf_dir, "lineitem").filter(
-        finite("l_extendedprice")
-    ).select(
-        "l_returnflag", "l_extendedprice"
-    ).persist()
+    # frames, which keep the identical lineitem slice).
+    li = keep(
+        load_parallel(spark, sf_dir, "lineitem")
+        .filter(finite("l_extendedprice"))
+        .select("l_returnflag", "l_extendedprice")
+    )
     med = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, 0.5)").alias("med")
     )

@@ -30,7 +30,7 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..graph.fixpoint import cut, static_rounds
+from ..graph.fixpoint import cut, hold, keep, static_rounds
 from ..io.sources import load_parallel, load_table
 
 TOPK = 5
@@ -202,37 +202,10 @@ def lsh_buckets(
     ).select("*", F.expr(packed).alias("bucket"))
 
 
-def _cache(df: DataFrame) -> DataFrame:
-    """Short-lived cache for subtrees used by both sides of a self-join
-    (exchange reuse is unreliable for these shapes under AQE; measured
-    3-5x recompute without it). A few MB per query; dies with session.
-
-    Registered under a core-count shuffle-partition clamp: cached plans
-    compile their exchanges with the conf in force at persist() time
-    and are exempt from AQE coalescing
-    (canChangeCachedPlanOutputPartitioning=false), so on a stock
-    200-partition session every cached-subtree stage would otherwise
-    launch 200 tasks regardless of data size (measured 22.5s -> 1.8s
-    for similarity_ivf_topk in isolation at sf0.1). Unlike the
-    fixpoint loops, the clamp here is defaultParallelism, NOT
-    input-byte-sized: these subtrees are compute-bound (per-element
-    vector math dominates), so partitions must cover every core even
-    when the input is a single small file — byte-sizing was measured
-    5x slower on embedding_neardup at sf0.1."""
-    from pyspark.storagelevel import StorageLevel
-
-    spark = df.sparkSession
-    with static_rounds(spark):  # clamp = defaultParallelism
-        # No eager action needed: the clamp's effect is the partitioning
-        # compiled into the cached plan at persist() time (asserted in
-        # tests/test_cache_clamp.py); the first consumer materializes.
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
 def ann_top1(vec: DataFrame) -> DataFrame:
     """Approximate top-1 neighbor per vector over (vec_id, v) input."""
     vec = vec.withColumn("nrm", F.sqrt(_dot("v", "v")))
-    banded = _cache(lsh_buckets(vec))
+    banded = keep(lsh_buckets(vec))
     a = banded.select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),
@@ -345,8 +318,10 @@ def ivf_topk(
     Centroids here are a deterministic sample (vec_id % centroid_mod == 0)
     standing in for k-means output — the *plan shape* is the real thing:
     centroids broadcast, one N x C assignment pass, then a bucket-keyed
-    equi-join. At 100 TB the inverted lists are the only shuffle and list
-    sizes are N/C on average; skewed lists split by AQE.
+    equi-join with the member lists broadcast. Once one row per vector
+    no longer fits a broadcast, that join must shuffle both sides: the
+    inverted lists become the only shuffle, list sizes are N/C on
+    average, and skewed lists split by AQE.
     """
     vec = vec.withColumn("nrm", F.sqrt(_dot("v", "v")))
     cents = vec.filter(F.col("vec_id") % centroid_mod == 0).select(
@@ -360,7 +335,7 @@ def ivf_topk(
         (_dot("v", "cv") / (F.col("nrm") * F.col("cn"))).alias("c_cos"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("c_id"))
-    ranked = _cache(scored.select("*", F.row_number().over(w).alias("c_rn")))
+    ranked = keep(scored.select("*", F.row_number().over(w).alias("c_rn")))
     members = ranked.filter(F.col("c_rn") == 1).select(
         F.col("c_id").alias("bucket"), F.col("vec_id").alias("nn_id"),
         F.col("v").alias("nv"), F.col("nrm").alias("nn_nrm"),
@@ -369,8 +344,12 @@ def ivf_topk(
         F.col("c_id").alias("bucket"), F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"), F.col("nrm").alias("qn"),
     )
+    # members (one row per vector) is the smaller side: probes has
+    # nprobe rows per vector. A kept leaf carries only the optimizer's
+    # size estimate, so without the hint AQE builds the probe side
+    # after two exchanges (measured ~2x slower at sf0.1).
     cand = (
-        probes.join(members, "bucket")
+        probes.join(F.broadcast(members), "bucket")
         .filter(F.col("nn_id") != F.col("q_id"))
         .dropDuplicates(["q_id", "nn_id"])
         .select(
@@ -834,9 +813,9 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; the oracle is the same three rounds unrolled as
     chained CTE stages (the label_propagation / bpe_merges device).
     """
-    # r12: persist — every Lloyd round re-scanned and re-cast the
+    # r12: kept — every Lloyd round re-scanned and re-cast the
     # embeddings otherwise (plus the seed filter).
-    vec = _vectors(spark, sf_dir).persist()
+    vec = keep(_vectors(spark, sf_dir))
     cents = vec.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("seed_id"), F.col("v").alias("cv")
     )
@@ -873,7 +852,7 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if r == KMEANS_TRAIN_ROUNDS - 1:
                 return sums
-            cents = (
+            cents = hold(
                 sums.groupBy("seed_id")
                 .agg(
                     F.transform(
@@ -883,7 +862,6 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                         lambda s: s["centroid"],
                     ).alias("cv")
                 )
-                .persist()
             )
             cents.count()  # force this round before the next one plans
 
@@ -992,9 +970,9 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds plus the Rayleigh-quotient improvement power iteration
     guarantees unconditionally.
     """
-    # r12: persist — the driver probe + PCA_ROUNDS aggregation jobs each
+    # r12: kept — the driver probe + PCA_ROUNDS aggregation jobs each
     # re-scanned and re-cast the embeddings otherwise.
-    vec = _vectors(spark, sf_dir).persist()
+    vec = keep(_vectors(spark, sf_dir))
     first = vec.select("v").first()  # 1-row driver probe for the dim
     if first is None:  # empty embeddings: typed empty result, no crash
         return spark.createDataFrame([], "j int, w_q long, loading double")
@@ -1461,17 +1439,17 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("cand_id"))
-    cands = (
+    cands = keep(
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= MMR_CANDS)
         .select("q_id", "cand_id", "sim")
-    ).persist()
+    )
     ca = cands.select("q_id", F.col("cand_id").alias("a"))
     cb = cands.select("q_id", F.col("cand_id").alias("b"))
     nv = norms.select(
         F.col("vec_id"), F.col("v"), F.col("nrm")
     )
-    cc = (
+    cc = keep(
         ca.join(cb, "q_id")
         .filter(F.col("a") != F.col("b"))
         .join(
@@ -1494,7 +1472,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id", "a", "b",
             (_dot("av", "bv") / (F.col("an") * F.col("bn"))).alias("cc_cos"),
         )
-    ).persist()
+    )
     lam = MMR_LAMBDA_10 / 10.0
     one_m = (10 - MMR_LAMBDA_10) / 10.0
     # round 1: empty selected set -> penalty 0, score = lambda * sim

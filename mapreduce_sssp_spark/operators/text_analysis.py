@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph.fixpoint import cut
+from ..graph.fixpoint import cut, keep
 from ..runstate import shared_state
 from ..io.sources import load_parallel, load_table
 from .text_common import (
@@ -1419,9 +1419,9 @@ def _learn_bpe(
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Run the merge iterations; returns (merges, post-merge vocab).
 
-    The returned vocab DataFrame stays persisted (few MB — one row per
-    distinct word; session-lifetime like the dedup subtree caches)."""
-    words = _bpe_vocab(docs).persist()
+    The returned vocab DataFrame is a kept leaf (few MB — one row per
+    distinct word), freed once the caller drops it."""
+    words = keep(_bpe_vocab(docs))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         pc = (
@@ -1447,16 +1447,18 @@ def _learn_bpe(
             break
         b = best[0]
         merges.append((rank, b.l, b.r, int(b.n)))
-        nxt = words.select(
-            F.replace(
-                F.col("s"),
-                F.lit(f" {b.l} {b.r} "),
-                F.lit(f" {b.l}{b.r} "),
-            ).alias("s"),
-            "cnt",
-        ).persist()
-        # Materialize nxt BEFORE dropping its parent's cache: persist()
-        # is lazy, so unpersisting words first would force the next
+        nxt = keep(
+            words.select(
+                F.replace(
+                    F.col("s"),
+                    F.lit(f" {b.l} {b.r} "),
+                    F.lit(f" {b.l}{b.r} "),
+                ).alias("s"),
+                "cnt",
+            )
+        )
+        # Materialize nxt BEFORE dropping its parent: keep() is lazy,
+        # so on a cluster unpersisting words first would force the next
         # iteration to recompute the whole lineage back to the corpus
         # scan — one extra corpus pass per merge, breaking the
         # "corpus is read exactly once" contract. The count() is over

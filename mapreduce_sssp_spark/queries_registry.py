@@ -164,82 +164,23 @@ def _driver_history():
     return red, set(latest)
 
 
-# Never-checked entries to surface FIRST within the never-checked group:
-# the driver samples ~50/round in registry order, and these would
-# otherwise sit just past the window for another round (r8 verdict task:
-# approx_quantiles_verified is the last sketch query without a driver
-# row — once it lands, every registry entry is either hash-green or
-# rows-only-by-design with a green verified twin).
-_NEVER_PRIORITY = ["approx_quantiles_verified"]
-
-# Queries whose ENGINE-SIDE behavior changed since their latest driver
-# row: they jump the green queue (right after red/never-checked) so the
-# change earns a fresh driver row the next round instead of riding stale
-# evidence. Maintained by hand when a semantics-affecting commit lands;
-# prune entries once the fresh row is in a CORRECTNESS_r*.json. The
-# round recorded here is the round the change SHIPPED — an entry is
-# stale only while its latest driver row predates that round.
-_CHANGED_SINCE = {
-    # r9 behavior changes (r9 verdict, "Next round" #7):
-    "gini_value": 10,                   # r9 zero-mass NULL + r10 sum>0 guard
-    "rolling_fingerprint": 9,           # oracle change (d79cadb)
-    "sink_partitioned_roundtrip": 9,    # explicit schema (1cba9d4)
-    # r10 behavior changes:
-    "dedup_minhash": 10,                # portable LSH + mirrored bucket cap
-    "dedup_minhash_clusters": 10,
-    "dedup_keep_best": 10,
-    "near_dup_cluster_stats": 10,
-    # r10 adversarial-sweep changes the r10 bump list missed (r10 verdict
-    # "What's missing" #1 — the backfill; latest driver rows r4-r9 all
-    # predate the commits 3841e2a/9f3d03d/ad1e9f9/127d9ab/e78a728 that
-    # changed them; scalar_string_math is NOT here because its r10 row
-    # postdates 1bb0c16):
-    "dedup_simhash": 10,                # unicode-safe simhash (3841e2a)
-    "multimodal_features": 10,          # oracle bytes-not-codepoints
-    "multimodal_frames": 10,            # oracle bytes-not-codepoints
-    "text_scrub": 10,                   # ASCII-\s token contract
-    "text_quality": 10,                 # denom guards (9f3d03d)
-    "text_repetition": 10,              # denom guards (9f3d03d)
-    "udtf_sentences": 10,               # space-only trim twin (e78a728)
-    "fuzzy_match_parts": 10,            # levenshtein chars contract
-    "corr_measures": 10,                # radicand guard (127d9ab)
-    "benford_digits": 10,               # log10 constant pin (ac52440)
-    "markov_stationary": 10,            # sweep fix
-    "anova_oneway": 10,                 # 2^53 rail (ad1e9f9)
-    "t_test_welch": 10,                 # radicand guard
-    "spearman_corr": 10,                # radicand guard
-    "kendall_tau_daily": 10,            # radicand guard
-    "cross_correlation_lag": 10,        # XCORR guard (ad1e9f9)
-    # r11 behavior changes:
-    "moments_value": 11,                # s1..s4 emitted as STRING carriers
-}
-
-
 def _changed_since():
-    """Hand list merged with the mechanical fingerprint snapshot
-    (ORACLE_HASHES.json, maintained by tools/update_fingerprints.py and
-    pinned fresh by tests/test_fingerprints.py): per query, the latest
-    round at which its semantics are known to have changed.  The hand
-    list survives for helper classes the fingerprint closure cannot see
-    and for the pre-r11 backfill; the snapshot catches everything the
-    hand forgot — the r10 failure mode this closes (r10 verdict,
-    "What's wrong" #2)."""
+    """Per query, the latest round at which its semantics changed: the
+    mechanical fingerprint snapshot (ORACLE_HASHES.json, maintained by
+    tools/update_fingerprints.py and pinned fresh by
+    tests/test_fingerprints.py). Empty when the snapshot is unreadable
+    (package imported outside the repo checkout)."""
     import json
     from pathlib import Path
 
-    merged = dict(_CHANGED_SINCE)
     try:
         snap = json.loads(
             (Path(__file__).resolve().parents[1] / "ORACLE_HASHES.json")
             .read_text()
         ).get("queries", {})
     except (OSError, ValueError):
-        return merged
-    for name, ent in snap.items():
-        rnd = ent.get("round", 0)
-        if rnd > merged.get(name, 0):
-            merged[name] = rnd
-    return merged
+        return {}
+    return {name: ent.get("round", 0) for name, ent in snap.items()}
 
 
 def _registry_order(names):
@@ -253,9 +194,6 @@ def _registry_order(names):
 
     front = [n for n in names if n in red]
     never = [n for n in names if n not in checked and n not in red]
-    never = [n for n in _NEVER_PRIORITY if n in never] + [
-        n for n in never if n not in _NEVER_PRIORITY
-    ]
     green = [n for n in names if n in checked and n not in red]
     # Changed-since-last-row entries jump the green queue: their driver
     # evidence predates the behavior change, so a fresh row is worth

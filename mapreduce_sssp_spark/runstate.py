@@ -79,8 +79,8 @@ def shared_state(owner: str | None = None):
     every other query that reaches the function in its source closure
     (fingerprints.closure) reads it at marginal cost. The wrapper
     exposes ``.owner`` and ``.clear()``; ``clear_shared_state()`` drops
-    every declared state. Bodies still ``cut`` their frame so it
-    survives a harness's clearCache() between queries."""
+    every declared state. Bodies ``cut`` their frame, so a reader
+    never replays the build, even after a caller's clearCache()."""
 
     def deco(fn):
         memo = RunCache()

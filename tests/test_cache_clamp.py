@@ -1,18 +1,19 @@
 """Cached-plan partition-clamp regression tests.
 
-Cached plans compile their exchanges with the conf in force when
-persist() registers them and are exempt from AQE coalescing
-(spark.sql.optimizer.canChangeCachedPlanOutputPartitioning defaults to
-false). Every cache registration in the repo therefore happens under a
-static_rounds(...) clamp. These tests simulate a stock driver session
-(spark.sql.shuffle.partitions=200) and assert the materialized caches
-did NOT inherit the 200 — the exact pathology that cost 50s/22s/15s
-per query on stock sessions before round 4 fixed it.
+A materialized frame compiles its exchanges with the conf in force when
+it is registered, and AQE cannot coalesce them afterwards. Every
+registration in the package therefore goes through fixpoint.keep, or
+hold inside a static_rounds(...) scope. These tests simulate a stock
+driver session (spark.sql.shuffle.partitions=200) and assert the
+materialized blocks did NOT inherit the 200 — the exact pathology that
+cost 50s/22s/15s per query on stock sessions before round 4 fixed it.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
+
+import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -99,3 +100,27 @@ def test_sssp_prelude_caches_ignore_stock_200(spark):
             f"cached RDD {info.name()} compiled at stock 200 partitions"
         )
     spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize(
+    "name",
+    # Each kept its frames with a bare persist() outside the clamp.
+    ["geo_dbscan_core", "mmr_rerank"],
+)
+def test_registry_keeps_ignore_stock_200(spark, name):
+    from mapreduce_sssp_spark.queries_registry import QUERIES
+
+    jsc = spark.sparkContext._jsc.sc()
+    before = {info.id() for info in jsc.getRDDStorageInfo()}
+    with stock_conf(spark):
+        out = QUERIES[name](spark, SF_SMOKE)
+        out.count()  # geo has no core point at sf0.001: 0 rows
+        infos = [
+            info for info in jsc.getRDDStorageInfo()
+            if info.id() not in before
+        ]
+    assert infos, f"expected {name} to materialize its kept frames"
+    for info in infos:
+        assert info.numPartitions() < 200, (
+            f"{name}: RDD {info.name()} compiled at stock 200 partitions"
+        )

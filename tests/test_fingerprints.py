@@ -1,4 +1,4 @@
-"""ORACLE_HASHES.json freshness pin — the mechanical _CHANGED_SINCE
+"""ORACLE_HASHES.json freshness pin — the mechanical changed-since
 referee (r10 ADVICE #4 / verdict "What's wrong" #2).
 
 A semantics-affecting edit to any registry query (engine function,
@@ -6,8 +6,8 @@ any helper it references, or its oracle SQL) changes that query's
 fingerprint; this test then fails until ``python
 tools/update_fingerprints.py`` is run, which bumps the query's
 ``round`` in the snapshot and thereby re-prioritizes it for a fresh
-driver row.  The hand-maintained bump list can no longer rot by
-omission.
+driver row.  The snapshot is the registry's only changed-since
+source, so no hand-maintained bump list can rot by omission.
 """
 
 from __future__ import annotations

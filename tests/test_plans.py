@@ -33,6 +33,15 @@ def plan_of(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def see_through_keep(monkeypatch) -> None:
+    """Build queries with fixpoint.keep as a no-op, for assertions about
+    the subtree a kept frame is built from: a kept frame is a flat leaf,
+    so the consumer's plan does not show what is inside it."""
+    from mapreduce_sssp_spark.graph import fixpoint
+
+    monkeypatch.setattr(fixpoint, "hold", lambda df: df)
+
+
 def test_join_inner_broadcasts_dim_and_never_cartesian(spark):
     plan = plan_of(R.q_join_inner(spark, SF))
     assert "BroadcastHashJoin" in plan  # nation (25 rows) must broadcast
@@ -165,13 +174,15 @@ def test_no_cartesian_products_anywhere(spark, qname):
     assert "CartesianProduct" not in plan
 
 
-def test_outliers_mad_broadcasts_group_medians(spark):
+def test_outliers_mad_broadcasts_group_medians(spark, monkeypatch):
     """Both per-group median tables (a handful of rows) must broadcast
     back onto the fact — the fact table itself never rides a join
     shuffle — and the scan must prune to the two referenced columns."""
     plan = plan_of(R.q_outliers_mad(spark, SF))
     assert plan.count("BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan
+    see_through_keep(monkeypatch)
+    plan = plan_of(R.q_outliers_mad(spark, SF))
     read_schema = plan.split("ReadSchema", 1)[1].split("\n", 1)[0]
     assert "l_extendedprice" in read_schema and "l_partkey" not in read_schema
 
@@ -848,9 +859,11 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark):
         "pipeline_clean_corpus",
     ],
 )
-def test_shingle_pair_queries_prune_hot_postings_before_join(spark, qname):
+def test_shingle_pair_queries_prune_hot_postings_before_join(
+    spark, qname, monkeypatch
+):
     """Every shingle-keyed pair query must compile the max-df posting
-    prune (text_common.SHINGLE_MAX_DF) BELOW its self-join: the cached
+    prune (text_common.SHINGLE_MAX_DF) BELOW its self-join: the kept
     postings relation both join sides scan carries the df filter, so a
     boilerplate shingle can never reach the pair join (the d^2 guard;
     behavior proven on a crafted hot-shingle corpus in
@@ -858,6 +871,7 @@ def test_shingle_pair_queries_prune_hot_postings_before_join(spark, qname):
     from mapreduce_sssp_spark.operators.text_common import SHINGLE_MAX_DF
     from mapreduce_sssp_spark.queries_registry import QUERIES
 
+    see_through_keep(monkeypatch)
     plan = plan_of(QUERIES[qname](spark, SF), "simple")
     # Since r10 the prune is an ANTI join against the HOT shingle set
     # (df > cap, tiny/broadcastable) instead of an inner join against
@@ -867,7 +881,6 @@ def test_shingle_pair_queries_prune_hot_postings_before_join(spark, qname):
     assert f"> {SHINGLE_MAX_DF})" in plan  # Filter (df#N > cap)
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
-    spark.catalog.clearCache()
 
 
 def test_negative_sampling_shard_ranks_no_global_sort_no_v_broadcast(spark):

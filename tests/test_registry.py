@@ -110,7 +110,7 @@ def test_registry_order_fallback_without_history():
 def test_green_tier_sorted_by_evidence_staleness_and_changed_bump():
     """r10 ordering: within the green tier, entries last checked in an
     EARLIER round precede fresher ones (ascending _round), and a query
-    listed in _CHANGED_SINCE whose last row predates the change jumps
+    whose fingerprint round postdates its last row jumps
     to the front of the greens. Synthetic history fixture, same device
     as test_rows_only_entries_with_new_oracle_are_red."""
     names = list(qr.QUERIES)
@@ -130,10 +130,8 @@ def test_green_tier_sorted_by_evidence_staleness_and_changed_bump():
     fixture[fresh] = green(9)
     fixture[mid] = green(4)
     fixture[changed] = green(3)
-    # Patch the MERGED view (_changed_since), not the hand dict: since
-    # r11 _registry_order reads the hand list merged with the
-    # ORACLE_HASHES.json fingerprint snapshot, whose live round-11
-    # entries would pollute this synthetic fixture.
+    # Patch _changed_since, the ORACLE_HASHES.json fingerprint rounds:
+    # its live entries would pollute this synthetic fixture.
     orig_rows = qr._latest_rows
     orig_changed = qr._changed_since
     qr._latest_rows = lambda: fixture

@@ -3,8 +3,8 @@
 Usage: python tools/ab_probe.py <query>[,query2,...] [n_samples]
 
 Times each named query with the bench's own methodology — bench's
-warm-up, noop sink, shared states cleared + clearCache between samples,
-and bench.prepare before the timer so a query that reads a shared state
+warm-up, noop sink, shared states cleared between samples, and
+bench.prepare before the timer so a query that reads a shared state
 measures its marginal cost, as the bench records it — and prints
 min/median of N samples. For A/B runs, run this before and after an
 edit on a quiet host; samples alternate nothing (single variant), so
@@ -38,7 +38,6 @@ def main() -> None:
     for s in range(n_samples):
         for name in names:
             clear_shared_state()
-            spark.catalog.clearCache()
             prepare(spark, sf_dir, name)
             spark.sparkContext.setJobDescription(f"ab:{name}#{s}")
             t0 = time.time()

@@ -160,13 +160,6 @@ def main():
             scols = list(sdf.columns)
             srows = [tuple(r) for r in sdf.collect()]
             spark_t = time.time() - t0
-            # Per-query isolation, same as bench.py: fixpoint queries
-            # leave their final state persisted; across 136 queries the
-            # executor memory pressure inflates later timings (wcc
-            # measured 8.6s isolated vs 15.4s late-sweep polluted).
-            # Reliable checkpoints (e.g. the memoized DAG state) survive
-            # this by design.
-            spark.catalog.clearCache()
             if name not in oracles:
                 print(f"  {name:28s} rows={len(srows):7d}  "
                       f"(rows-only, no oracle) [spark {spark_t:.1f}s]")
@@ -197,7 +190,6 @@ def main():
             first = str(e).splitlines()[0][:300] if str(e) else repr(e)
             print(f"  {name:28s} CRASH              {first}")
             failures.append((name, f"CRASH: {first}"))
-            spark.catalog.clearCache()
     print()
     if failures:
         print("FAILURES:")

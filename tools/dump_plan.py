@@ -41,7 +41,6 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange mentions)")
-        spark.catalog.clearCache()
 
 
 if __name__ == "__main__":
