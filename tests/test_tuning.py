@@ -1,5 +1,6 @@
 """The data/deployment-aware tuning helpers: fixpoint-loop partition
-sizing, the streaming state-store clamp and the default driver heap.
+sizing, the streaming state-store clamp, the default driver heap and
+the codegen class cache.
 
 Both only ever LOWER parallelism below the session's setting — a session
 tuned for a real cluster keeps its sizing — and both restore the session
@@ -90,6 +91,28 @@ def test_driver_memory_is_half_of_ram_within_1g_and_32g():
     assert driver_memory(64 * gib) == "32768m"
     assert driver_memory(512 * gib) == "32768m"
     assert driver_memory(1 * gib) == "1024m"
+
+
+def _codegen_compiles(spark) -> int:
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_holds_a_repeated_cycle(spark):
+    """A cycle of 60 plans (2 generated classes each, 120 in all, above
+    Spark's default cache of 100) run twice in the same order must not
+    compile again on the second pass. An LRU cache smaller than the cycle
+    would recompile every class."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192"
+
+    def cycle() -> None:
+        for i in range(60):  # the literal is inlined: new classes per plan
+            spark.range(8).selectExpr(f"id * {i + 2} AS x").collect()
+
+    cycle()
+    before = _codegen_compiles(spark)
+    cycle()
+    assert _codegen_compiles(spark) - before == 0
 
 
 def test_driver_memory_reads_the_host():

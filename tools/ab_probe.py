@@ -6,9 +6,12 @@ Times each named query with the bench's own methodology — bench's
 warm-up, noop sink, shared states cleared between samples, and
 bench.prepare before the timer so a query that reads a shared state
 measures its marginal cost, as the bench records it — and prints
-min/median of N samples. For A/B runs, run this before and after an
-edit on a quiet host; samples alternate nothing (single variant), so
-edit-compare-edit loops should keep the host load equal.
+min/median of N samples. Each sample line also carries the codegen
+classes compiled and the JVM's JIT compile milliseconds during the
+sample, both read outside the timer: a sample bound by compilation
+rather than by the query shows there. For A/B runs, run this before
+and after an edit on a quiet host; samples alternate nothing (single
+variant), so edit-compare-edit loops should keep the host load equal.
 """
 from __future__ import annotations
 
@@ -33,6 +36,9 @@ def main() -> None:
     spark = get_spark(app_name="spark-graft-ab")
     queries = entrymod.queries()
     warm_up(spark, sf_dir)
+    jvm = spark.sparkContext._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
 
     results: dict[str, list[float]] = {n: [] for n in names}
     for s in range(n_samples):
@@ -40,13 +46,20 @@ def main() -> None:
             clear_shared_state()
             prepare(spark, sf_dir, name)
             spark.sparkContext.setJobDescription(f"ab:{name}#{s}")
+            compiles0, jit0 = codegen.getCount(), jit.getTotalCompilationTime()
             t0 = time.time()
             queries[name](spark, sf_dir).write.mode("overwrite").format(
                 "noop"
             ).save()
             dt = time.time() - t0
+            compiles = codegen.getCount() - compiles0
+            jit_ms = jit.getTotalCompilationTime() - jit0
             results[name].append(dt)
-            print(f"[ab] {name} sample {s}: {dt:.3f}s", file=sys.stderr)
+            print(
+                f"[ab] {name} sample {s}: {dt:.3f}s codegen={compiles} "
+                f"jit_ms={jit_ms}",
+                file=sys.stderr,
+            )
     for name in names:
         xs = results[name]
         print(
