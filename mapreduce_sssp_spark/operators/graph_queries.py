@@ -395,8 +395,8 @@ def q_betweenness_source_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     longer hits the cache — measured as the whole tight build
     re-planning inline every round (8 Exchanges/round); as leaves
     there is nothing to substitute and the chain plans at exactly one
-    Exchange per round (plans/r13/betweenness_source_dag_after.txt:
-    7 Exchange + 14 SortMergeJoin per sweep).
+    Exchange per round (its row in tests/plan_census.py: 22 Exchange
+    in all, 7 in each sweep).
     Measured (bench methodology, sf0.1, marginal on the warm sssp_dag
     memo): 14.4 s (r12 driver) -> 4.6 s min-of-3 (phase split: tight
     1.6, sigma sweep 1.5, tsig 0.2, delta+out 2.0).
